@@ -228,6 +228,29 @@ class RugoCommit(WriterCommitMessage):
     sidecar: str  # JSON sidecar row (None-rows partitions send "")
 
 
+def _write_staged(writer, iterator) -> RugoCommit:
+    """Task side of both format('rugo') writers: encode the task's rows into
+    one attempt-unique STAGING block; the driver's ``commit`` publishes it."""
+    import pyarrow as pa
+    from pyspark import TaskContext
+
+    from rugo_spark.engine import encode_block_row
+
+    ctx = TaskContext.get()
+    pid, attempt = ctx.partitionId(), ctx.taskAttemptId()
+    batch_list = list(iterator)
+    if not batch_list:
+        return RugoCommit("")
+    tbl = pa.Table.from_batches(batch_list)
+    if tbl.num_rows == 0:
+        return RugoCommit("")
+    path = os.path.join(writer.staging, f"a{attempt}-p{pid}.rgb")
+    row = encode_block_row(
+        tbl, path, pid, sort_key=writer.sort_key, size_col=writer.size_col
+    )
+    return RugoCommit(json.dumps(row, default=str))
+
+
 class RugoWriter(DataSourceArrowWriter):
     """Map-only encode under the V2 commit protocol.  Tasks encode to
     attempt-unique STAGING files (concurrent speculative attempts cannot
@@ -278,24 +301,7 @@ class RugoWriter(DataSourceArrowWriter):
                     )
 
     def write(self, iterator) -> RugoCommit:
-        import pyarrow as pa
-        from pyspark import TaskContext
-
-        from rugo_spark.engine import encode_block_row
-
-        ctx = TaskContext.get()
-        pid, attempt = ctx.partitionId(), ctx.taskAttemptId()
-        batch_list = list(iterator)
-        if not batch_list:
-            return RugoCommit("")
-        tbl = pa.Table.from_batches(batch_list)
-        if tbl.num_rows == 0:
-            return RugoCommit("")
-        path = os.path.join(self.staging, f"a{attempt}-p{pid}.rgb")
-        row = encode_block_row(
-            tbl, path, pid, sort_key=self.sort_key, size_col=self.size_col
-        )
-        return RugoCommit(json.dumps(row, default=str))
+        return _write_staged(self, iterator)
 
     def commit(self, messages) -> None:
         import shutil
@@ -341,7 +347,7 @@ class RugoWriter(DataSourceArrowWriter):
         mf.write_schema(self.out_dir, arrow_schema, self._schema_json)
         for row in rows:
             pid = offset + int(row["partition_id"])
-            dst = os.path.join(self.out_dir, mf.BLOCKS_DIR, f"part-{pid:06d}.rgb")
+            dst = mf.block_path(self.out_dir, pid)
             os.makedirs(os.path.dirname(dst), exist_ok=True)
             os.replace(row["block_path"], dst)
             row["partition_id"], row["block_path"] = pid, dst
@@ -380,24 +386,7 @@ class RugoStreamWriter(DataSourceStreamArrowWriter):
         self.staging = os.path.join(self.out_dir, ".staging")
 
     def write(self, iterator) -> RugoCommit:
-        import pyarrow as pa
-        from pyspark import TaskContext
-
-        from rugo_spark.engine import encode_block_row
-
-        ctx = TaskContext.get()
-        pid, attempt = ctx.partitionId(), ctx.taskAttemptId()
-        batch_list = list(iterator)
-        if not batch_list:
-            return RugoCommit("")
-        tbl = pa.Table.from_batches(batch_list)
-        if tbl.num_rows == 0:
-            return RugoCommit("")
-        path = os.path.join(self.staging, f"a{attempt}-p{pid}.rgb")
-        row = encode_block_row(
-            tbl, path, pid, sort_key=self.sort_key, size_col=self.size_col
-        )
-        return RugoCommit(json.dumps(row, default=str))
+        return _write_staged(self, iterator)
 
     def commit(self, messages, batchId: int) -> None:  # noqa: N803 (API name)
         import shutil
@@ -422,16 +411,12 @@ class RugoStreamWriter(DataSourceStreamArrowWriter):
             if m is None or not m.sidecar:
                 continue
             row = json.loads(m.sidecar)
-            dst = os.path.join(
-                tmp_dir, mf.BLOCKS_DIR, f"part-{int(row['partition_id']):06d}.rgb"
-            )
+            dst = mf.block_path(tmp_dir, int(row["partition_id"]))
             os.makedirs(os.path.dirname(dst), exist_ok=True)
             os.replace(row["block_path"], dst)
             # sidecar paths are epoch-relative at read time only via this
             # rewrite: record the FINAL path the rename will produce
-            row["block_path"] = os.path.join(
-                epoch_dir, mf.BLOCKS_DIR, os.path.basename(dst)
-            )
+            row["block_path"] = mf.block_path(epoch_dir, int(row["partition_id"]))
             mf.write_sidecar(tmp_dir, row)
         # completeness marker INSIDE the staged dir: the atomic rename below
         # publishes epoch + marker together, so decode_batches sees this

@@ -1,13 +1,15 @@
-"""Encode/decode pipeline: applyInArrow encoder, mapInArrow decoder, resume.
+"""Encode/decode pipeline: mapInArrow block writer, mapInArrow decoder, resume.
 
 Lifecycle (SURVEY.md §3.4): plan deterministic size-balanced partition ids →
 anti-join already-completed partitions from the manifest (checkpoint-restart)
-→ one shuffle into ``groupBy(partition_id).applyInArrow(encoder)`` → each
-task sorts its group by the key column (bit-stable blocks regardless of
-shuffle arrival order), encodes every column through the block container,
-writes the block file and manifest sidecar atomically, and returns one
-lineage row.  Decode is ``mapInArrow`` over manifest rows — one task per
-block file, no shuffle, streaming RecordBatches out.
+→ one shuffle, ``repartition(n, __rugo_pid).mapInArrow(_block_writer)`` →
+each task sorts its rows by (partition id, key column) (bit-stable blocks
+regardless of shuffle arrival order), encodes every pid's run through the
+block container, writes the block file and manifest sidecar atomically, and
+returns one lineage row per block.  The map-only, sorted and append paths
+run the same writer with one split per block.  Decode is ``mapInArrow`` over
+manifest rows — one task per block file, no shuffle, streaming RecordBatches
+out.
 
 Everything data-sized stays in Arrow/numpy; Python touches only per-partition
 scalars (the north rule's "no per-row Python in the hot path").
@@ -63,12 +65,7 @@ def encode_block_bytes(table: pa.Table, plans: dict | None = None) -> tuple[byte
 
 def _atomic_write(path: str, payload: bytes) -> int:
     os.makedirs(os.path.dirname(path), exist_ok=True)
-    # attempt-unique temp name: with speculative execution two attempts of
-    # the same task may write concurrently — a SHARED temp name would have
-    # them interleave into one inode and publish a torn file
-    import uuid
-
-    tmp = f"{path}.inprogress.{uuid.uuid4().hex[:12]}"
+    tmp = mf.inprogress_path(path)
     with open(tmp, "wb") as f:
         f.write(payload)
     os.replace(tmp, path)
@@ -82,44 +79,54 @@ def write_block_file(path: str, table: pa.Table, plans: dict | None = None) -> t
     return _atomic_write(path, payload), metas
 
 
-# raw Arrow bytes per intra-block stripe for the map-only/append/V2 writers
-# (the grouped path stripes naturally at map-combine granularity).  Big
-# splits become RGS2 blocks with a per-stripe min/max directory, so point
-# lookups and ranged reads skip STRIPE BYTES inside one block instead of
-# decoding a whole 64-128 MB split.
+# raw Arrow bytes per intra-block stripe for the writers that encode one
+# table into one block (precombine's stripes are its map-side outputs
+# instead).  Big tables become RGS2 blocks with a per-stripe min/max
+# directory, so point lookups and ranged reads skip STRIPE BYTES inside one
+# block instead of decoding a whole 64-128 MB split.
 _STRIPE_TARGET_BYTES = 8 << 20
+
+
+def _minmax_dir(metas: dict) -> dict:
+    """``{col: [min, max]}`` over the columns of one stripe's (or block's)
+    codec metas that carry both stats — one RGS2 directory entry."""
+    return {
+        c: [m["min"], m["max"]]
+        for c, m in metas.items()
+        if m.get("min") is not None and m.get("max") is not None
+    }
+
+
+def _write_rgs2(path: str, stripes: list, dir_entries: list[dict]) -> int:
+    """Frame encoded stripe payloads as one RGS2 block — magic, stripe
+    count, the JSON min/max directory, then length-prefixed stripes — and
+    write it atomically.  Returns the block's crc32."""
+    dir_blob = json.dumps(dir_entries, default=str).encode()
+    parts = [STRIPED_MAGIC2, struct.pack("<I", len(stripes)),
+             _U64.pack(len(dir_blob)), dir_blob]
+    for blob in stripes:
+        parts.append(_U64.pack(len(blob)))
+        parts.append(blob)
+    return _atomic_write(path, b"".join(parts))
 
 
 def _write_striped_block(
     path: str, tbl: pa.Table, plans: dict | None
 ) -> tuple[int, dict]:
     """write_block_file, but large tables chunk into ~8 MB-raw stripes
-    under an RGS2 directory (same wire format the grouped reduce writes).
-    Deterministic: stripe boundaries derive only from the table's own
-    shape, so crash-resume re-encodes bit-identically."""
+    under an RGS2 directory.  Deterministic: stripe boundaries derive only
+    from the table's own shape, so crash-resume re-encodes bit-identically."""
     n = tbl.num_rows
     per_row = max(1, tbl.nbytes // max(n, 1))
     rows_per = max(4096, _STRIPE_TARGET_BYTES // per_row)
     if n <= rows_per + rows_per // 2:  # one stripe: flat block, no directory
         return write_block_file(path, tbl, plans)
-    stripes, metas_list, dir_entries = [], [], []
+    stripes, metas_list = [], []
     for s in range(0, n, rows_per):
-        sub = tbl.slice(s, min(rows_per, n - s))
-        payload, metas = encode_block_bytes(sub, plans)
+        payload, metas = encode_block_bytes(tbl.slice(s, min(rows_per, n - s)), plans)
         stripes.append(payload)
         metas_list.append(metas)
-        dir_entries.append({
-            c: [m["min"], m["max"]]
-            for c, m in metas.items()
-            if m.get("min") is not None and m.get("max") is not None
-        })
-    dir_blob = json.dumps(dir_entries, default=str).encode()
-    parts = [STRIPED_MAGIC2, struct.pack("<I", len(stripes)),
-             struct.pack("<Q", len(dir_blob)), dir_blob]
-    for blob in stripes:
-        parts.append(struct.pack("<Q", len(blob)))
-        parts.append(blob)
-    crc = _atomic_write(path, b"".join(parts))
+    crc = _write_rgs2(path, stripes, [_minmax_dir(m) for m in metas_list])
     return crc, merge_column_metas(metas_list)
 
 
@@ -132,12 +139,13 @@ def encode_block_row(
     plans: dict | None = None,
     presorted: bool = False,
 ) -> dict:
-    """Shared kernel for every block producer (map-only encoder, grouped
-    encoder, the V2 batch/stream writers): sort, encode, write atomically,
-    and build the manifest sidecar row (incl. bloom on the sort key).  ONE
-    definition so the manifest vocabulary and bloom policy cannot drift
-    between surfaces.  ``presorted`` skips the redundant re-sort when the
-    caller already ordered the rows by ``sort_key``."""
+    """Shared kernel for every block producer that encodes one table into
+    one block (``_block_writer``, recluster, the V2 batch/stream writers):
+    sort, encode, write atomically, and build the manifest sidecar row
+    (incl. bloom on the sort key).  ONE definition so the manifest
+    vocabulary and bloom policy cannot drift between surfaces.
+    ``presorted`` skips the redundant re-sort when the caller already
+    ordered the rows by ``sort_key``."""
     if sort_key is not None and not presorted:
         tbl = tbl.sort_by(sort_key)
     crc, metas = _write_striped_block(path, tbl, plans)
@@ -564,67 +572,88 @@ def encode_table_maponly(
                     f"(fingerprint {prev.get('input_fingerprint')} != {fp}); "
                     "pass on_layout_change='clear' to re-encode from scratch"
                 )
-    extra = {"input_fingerprint": fp}
-    if size_col is not None:
-        # recorded so later delete commits can account exact token mass
-        # (delete_where reads which column n_tokens summed)
-        extra["size_col"] = size_col
-    # a RESUME must not blow away durable payload state the user added
-    # after the first run (CHECK constraints, a rename/drop column view,
-    # a z-order spec) — the schema rewrite below is unconditional
-    prior = mf.read_schema_payload(out_dir) or {}
-    for k in ("constraints", "column_view", "zorder"):
-        if k in prior and k not in extra:
-            extra[k] = prior[k]
+    # size_col is recorded so later delete commits can account exact token
+    # mass (delete_where reads which column n_tokens summed)
+    extra = mf.carry_payload(prev, input_fingerprint=fp, size_col=size_col)
     mf.write_schema(out_dir, _arrow_schema_of(df), df.schema.json(), extra=extra)
-    encoder = _split_encoder(spark, out_dir, sort_key, size_col, plans)
+    encoder = _block_writer(spark, out_dir, sort_key, size_col, plans, pid_base=0)
     df.mapInArrow(encoder, mf.MANIFEST_DDL).write.mode("overwrite").format("noop").save()
     mf.commit_snapshot(out_dir, "encode")
     return manifest_df(spark, out_dir)
 
 
-def _split_encoder(spark, out_dir, sort_key, size_col, plans, pid_base: int = 0):
-    """One-split-one-block encoder closure shared by the map-only and append
-    paths (``pid_base`` offsets the append band).  Skip-if-sidecar-exists is
-    the per-split resume contract; pids whose sidecar was folded into a
-    manifest segment (loose file deleted) are skipped via the segment pid
-    set computed once on the driver — without it a resume after
-    consolidation would pointlessly re-encode every consolidated split.
-    The set ships as a BROADCAST sorted int64 array (once per executor, a
-    few MB at 10⁶ pids), not a closure-captured frozenset re-serialized
-    with every task (review r5)."""
+def _pid_runs(tbl: pa.Table, sort_key: str | None):
+    """Walk a table carrying ``__rugo_pid`` in (pid, sort_key) order:
+    yields ``(pid, rows)`` per partition id, the pid column dropped."""
     import numpy as np
 
-    blocks_dir = os.path.join(out_dir, mf.BLOCKS_DIR)
+    if tbl.num_rows == 0:
+        return
+    keys = [("__rugo_pid", "ascending")] + ([(sort_key, "ascending")] if sort_key else [])
+    tbl = tbl.sort_by(keys)
+    pids = tbl.column("__rugo_pid").to_numpy()
+    bounds = np.concatenate(([0], np.flatnonzero(np.diff(pids)) + 1, [len(pids)]))
+    for s, e in zip(bounds[:-1], bounds[1:]):  # per block, not per row
+        yield int(pids[s]), tbl.slice(s, e - s).drop_columns("__rugo_pid")
+
+
+def _block_writer(spark, out_dir, sort_key, size_col, plans, pid_base: int | None = None):
+    """The task-side block writer closure of every encode path: per task,
+    walk the (pid, sort_key)-ordered runs, skip pids already done, encode
+    each run into one block plus its sidecar, and yield the manifest rows.
+
+    The pid comes from the ``__rugo_pid`` column (``pid_base=None``: the
+    grouped encode, one task writes every pid routed to it) or is
+    ``pid_base + partitionId()`` (one split, one block: the map-only,
+    sorted and append paths; ``pid_base`` offsets the append band).
+
+    Skip-if-sidecar-exists is the per-pid resume contract; pids whose
+    sidecar was folded into a manifest segment (loose file deleted) are
+    skipped via the segment pid set computed once on the driver — without
+    it a resume after consolidation would pointlessly re-encode every
+    consolidated split.  The set ships as a BROADCAST sorted int64 array
+    (once per executor, a few MB at 10⁶ pids), not a closure-captured
+    frozenset re-serialized with every task (review r5)."""
+    import numpy as np
+
     if mf.segment_catalog(out_dir):
         seg_arr = np.array(sorted(mf.segment_pids(out_dir)), dtype=np.int64)
     else:
         seg_arr = np.empty(0, dtype=np.int64)
     seg_bc = spark.sparkContext.broadcast(seg_arr)
 
-    def encoder(batches):
-        import numpy as np
-        from pyspark import TaskContext
-
-        pid = pid_base + TaskContext.get().partitionId()
+    def done(pid: int) -> bool:
         seg = seg_bc.value
         i = int(np.searchsorted(seg, pid))
-        if (i < len(seg) and int(seg[i]) == pid) or os.path.exists(
+        return (i < len(seg) and int(seg[i]) == pid) or os.path.exists(
             mf.sidecar_path(out_dir, pid)
-        ):
-            return  # resume: split already encoded
+        )
+
+    def encoder(batches):
+        from pyspark import TaskContext
+
+        if pid_base is not None:
+            pid = pid_base + TaskContext.get().partitionId()
+            if done(pid):
+                return  # resume: split already encoded
         batch_list = list(batches)
         if not batch_list:
             return
         tbl = pa.Table.from_batches(batch_list)
-        path = os.path.join(blocks_dir, f"part-{pid:06d}.rgb")
-        row = encode_block_row(
-            tbl, path, pid, sort_key=sort_key, size_col=size_col, plans=plans
-        )
-        mf.write_sidecar(out_dir, row)
-        yield pa.RecordBatch.from_pylist(
-            [{k: row[k] for k in mf.MANIFEST_ARROW.names}], schema=mf.MANIFEST_ARROW
-        )
+        if pid_base is None:
+            runs = [(p, sub) for p, sub in _pid_runs(tbl, sort_key) if not done(p)]
+        else:
+            runs = [(pid, tbl.sort_by(sort_key) if sort_key else tbl)]
+        rows = []
+        for pid, sub in runs:
+            row = encode_block_row(
+                sub, mf.block_path(out_dir, pid), pid, sort_key=sort_key,
+                size_col=size_col, plans=plans, presorted=True,
+            )
+            mf.write_sidecar(out_dir, row)
+            rows.append(row)
+        if rows:
+            yield mf.manifest_batch(rows)
 
     return encoder
 
@@ -987,7 +1016,7 @@ def append_table(
                 k: v for k, v in prev.items() if not k.startswith("_")
             }
         _atomic_write(marker, json.dumps(reservation).encode())
-    encoder = _split_encoder(spark, out_dir, sort_key, size_col, plans, pid_base=base)
+    encoder = _block_writer(spark, out_dir, sort_key, size_col, plans, pid_base=base)
     df.mapInArrow(encoder, mf.MANIFEST_DDL).write.mode("append").format("noop").save()
     if new_names:
         # widen the dataset schema to the union, atomically, BEFORE the
@@ -1098,23 +1127,14 @@ def reclaim_append(out_dir: str, fingerprint: str | None = None) -> dict:
     for m in stale:
         base = int(m["base"])
         hi = base + mf.APPEND_BAND
-
-        def _pid_of(name: str, suffix: str) -> int:
-            try:
-                return int(name[len("part-"):-len(suffix)])
-            except ValueError:
-                return -1
-
         if os.path.isdir(mdir):
             for name in os.listdir(mdir):
-                if name.startswith("part-") and name.endswith(".json") and \
-                        base <= _pid_of(name, ".json") < hi:
+                if name.endswith(".json") and base <= mf.part_pid(name) < hi:
                     os.remove(os.path.join(mdir, name))
                     result["sidecars_deleted"] += 1
         if os.path.isdir(bdir):
             for name in os.listdir(bdir):
-                if name.startswith("part-") and name.endswith(".rgb") and \
-                        base <= _pid_of(name, ".rgb") < hi:
+                if name.endswith(".rgb") and base <= mf.part_pid(name) < hi:
                     os.remove(os.path.join(bdir, name))
                     result["blocks_deleted"] += 1
         sb = m.get("schema_before")
@@ -1135,15 +1155,6 @@ def reclaim_append(out_dir: str, fingerprint: str | None = None) -> dict:
         os.remove(m["_path"])  # LAST: crash above leaves the band reclaimable
         result["reclaimed"].append({"base": base, "fingerprint": m.get("fingerprint")})
     return result
-
-
-def _pid_of_block_path(path: str) -> int:
-    """partition id from a block file path (``…/part-<pid>.rgb``)."""
-    name = os.path.basename(path)
-    try:
-        return int(name[len("part-"):-len(".rgb")])
-    except ValueError:
-        return -1
 
 
 def _predicate_positions(batches, filters, offset_base: int = 0):
@@ -2090,20 +2101,14 @@ def encode_table(
         )
         planned = planned.join(F.broadcast(done_df), "__rugo_pid", "left_anti")
 
-    _extra = {"size_col": size_col} if size_col is not None else {}
     # resume must not drop durable payload state added after the first run
-    _prior_payload = mf.read_schema_payload(out_dir) or {}
-    for _k in ("constraints", "column_view", "zorder"):
-        if _k in _prior_payload and _k not in _extra:
-            _extra[_k] = _prior_payload[_k]
     mf.write_schema(
         out_dir,
         _arrow_schema_of(df),
         df.schema.json(),
-        extra=_extra or None,
+        extra=mf.carry_payload(mf.read_schema_payload(out_dir), size_col=size_col),
     )
     sort_key = key_col
-    blocks_dir = os.path.join(out_dir, mf.BLOCKS_DIR)
 
     if precombine:
         # Small-stripe path: per-stripe FSST training (~20 ms) would dominate
@@ -2113,37 +2118,10 @@ def encode_table(
         plans = _auto_string_plans(df, out_dir, plans)
         try:
             return _encode_precombine(
-                spark, planned, out_dir, blocks_dir, sort_key, size_col, num_partitions, plans
+                spark, planned, out_dir, sort_key, size_col, num_partitions, plans
             )
         finally:
             release_after_plan(plan_handle)
-
-    def encoder(batches):
-        import numpy as np
-
-        batch_list = list(batches)
-        if not batch_list:
-            return
-        tbl = pa.Table.from_batches(batch_list)
-        if tbl.num_rows == 0:
-            return
-        keys = [("__rugo_pid", "ascending")] + ([(sort_key, "ascending")] if sort_key else [])
-        tbl = tbl.sort_by(keys)
-        pids = tbl.column("__rugo_pid").to_numpy()
-        bounds = np.concatenate(([0], np.flatnonzero(np.diff(pids)) + 1, [len(pids)]))
-        out_rows = []
-        for s, e in zip(bounds[:-1], bounds[1:]):  # per block, not per row
-            pid = int(pids[s])
-            sub = tbl.slice(s, e - s).drop_columns("__rugo_pid")
-            path = os.path.join(blocks_dir, f"part-{pid:06d}.rgb")
-            # shared kernel; the slice is already (pid, sort_key)-ordered
-            row = encode_block_row(
-                sub, path, pid, sort_key=sort_key, size_col=size_col,
-                plans=plans, presorted=True,
-            )
-            mf.write_sidecar(out_dir, row)
-            out_rows.append({k: row[k] for k in mf.MANIFEST_ARROW.names})
-        yield pa.RecordBatch.from_pylist(out_rows, schema=mf.MANIFEST_ARROW)
 
     # ONE shuffle on the partition id; the reduce stage may run FEWER tasks
     # than logical partitions (each task slices its rows per pid and writes
@@ -2163,6 +2141,7 @@ def encode_table(
     else:
         n_tasks = max(par * 8, int(num_partitions) // 8)
     shuffled = planned.repartition(n_tasks, "__rugo_pid")
+    encoder = _block_writer(spark, out_dir, sort_key, size_col, plans)
     result = shuffled.mapInArrow(encoder, mf.MANIFEST_DDL)
     try:
         result.write.mode("overwrite").format("noop").save()
@@ -2333,18 +2312,25 @@ def _auto_string_plans(df: DataFrame, out_dir: str, plans: dict | None) -> dict 
     return merged
 
 
-_STRIPE_DDL = (
-    "partition_id int, stripe binary, n_rows long, n_tokens long, "
-    "input_bytes long, min_key string, meta string, bloom string"
-)
+# precombine's map-side output: one encoded stripe per (map task, pid) run
+_STRIPE_ARROW = pa.schema([
+    ("partition_id", pa.int32()),
+    ("stripe", pa.binary()),
+    ("n_rows", pa.int64()),
+    ("n_tokens", pa.int64()),
+    ("input_bytes", pa.int64()),
+    ("min_key", pa.string()),
+    ("meta", pa.string()),
+    ("bloom", pa.string()),
+])
 
 
 def _encode_precombine(
-    spark, planned, out_dir, blocks_dir, sort_key, size_col, num_partitions, plans
+    spark, planned, out_dir, sort_key, size_col, num_partitions, plans
 ) -> DataFrame:
     """Map-side-combine encode: stripes encoded in the map stage, shuffled
     compressed, concatenated per partition in the reduce stage."""
-    import numpy as np
+    from pyspark.sql.pandas.types import from_arrow_schema
 
     def map_encode(batches):
         import pyarrow.compute as pc
@@ -2352,15 +2338,7 @@ def _encode_precombine(
         batch_list = list(batches)
         if not batch_list:
             return
-        tbl = pa.Table.from_batches(batch_list)
-        if tbl.num_rows == 0:
-            return
-        keys = [("__rugo_pid", "ascending")] + ([(sort_key, "ascending")] if sort_key else [])
-        tbl = tbl.sort_by(keys)
-        pids = tbl.column("__rugo_pid").to_numpy()
-        bounds = np.concatenate(([0], np.flatnonzero(np.diff(pids)) + 1, [len(pids)]))
-        for s, e in zip(bounds[:-1], bounds[1:]):
-            sub = tbl.slice(s, e - s).drop_columns("__rugo_pid")
+        for pid, sub in _pid_runs(pa.Table.from_batches(batch_list), sort_key):
             payload, metas = encode_block_bytes(sub, plans)
             n_tokens = int(pc.sum(sub.column(size_col)).as_py() or 0) if size_col else 0
             min_key = str(sub.column(sort_key)[0].as_py()) if sort_key else ""
@@ -2373,9 +2351,9 @@ def _encode_precombine(
             yield pa.RecordBatch.from_pylist(
                 [
                     {
-                        "partition_id": int(pids[s]),
+                        "partition_id": pid,
                         "stripe": payload,
-                        "n_rows": int(e - s),
+                        "n_rows": sub.num_rows,
                         "n_tokens": n_tokens,
                         "input_bytes": int(sub.nbytes),
                         "min_key": min_key,
@@ -2383,21 +2361,10 @@ def _encode_precombine(
                         "bloom": bloom_json,
                     }
                 ],
-                schema=pa.schema(
-                    [
-                        ("partition_id", pa.int32()),
-                        ("stripe", pa.binary()),
-                        ("n_rows", pa.int64()),
-                        ("n_tokens", pa.int64()),
-                        ("input_bytes", pa.int64()),
-                        ("min_key", pa.string()),
-                        ("meta", pa.string()),
-                        ("bloom", pa.string()),
-                    ]
-                ),
+                schema=_STRIPE_ARROW,
             )
 
-    stripes = planned.mapInArrow(map_encode, _STRIPE_DDL)
+    stripes = planned.mapInArrow(map_encode, from_arrow_schema(_STRIPE_ARROW))
 
     def assemble(key: tuple, table: pa.Table) -> pa.Table:
         pid = int(key[0].as_py())
@@ -2419,29 +2386,14 @@ def _encode_precombine(
             ],
         )
         table = table.take(order).drop_columns("_stripe_crc")
-        stripe_col = table.column("stripe")
         metas_list = [json.loads(m) for m in table.column("meta").to_pylist()]
         # stripe directory: per-stripe per-column min/max, so point lookups
         # can skip stripes INSIDE a block (rugo's per-row-group stats analog)
-        stripe_dir = [
-            {
-                col: [m["min"], m["max"]]
-                for col, m in metas.items()
-                if m.get("min") is not None and m.get("max") is not None
-            }
-            for metas in metas_list
-        ]
-        dir_blob = json.dumps(stripe_dir, default=str).encode()
-        parts = [b"RGS2", struct.pack("<I", table.num_rows)]
-        parts.append(struct.pack("<Q", len(dir_blob)))
-        parts.append(dir_blob)
-        for i in range(table.num_rows):  # per stripe, not per row
-            blob = stripe_col[i].as_py()
-            parts.append(struct.pack("<Q", len(blob)))
-            parts.append(blob)
-        payload = b"".join(parts)
-        path = os.path.join(blocks_dir, f"part-{pid:06d}.rgb")
-        crc = _atomic_write(path, payload)
+        path = mf.block_path(out_dir, pid)
+        crc = _write_rgs2(
+            path, table.column("stripe").to_pylist(),
+            [_minmax_dir(m) for m in metas_list],
+        )
         merged = merge_column_metas(metas_list)
         row = {
             "partition_id": pid,
@@ -2460,9 +2412,7 @@ def _encode_precombine(
             row["bloom_col"] = sort_key
             row["bloom"] = _bloom.union(blooms)
         mf.write_sidecar(out_dir, row)
-        return pa.Table.from_pylist(
-            [{k: row[k] for k in mf.MANIFEST_ARROW.names}], schema=mf.MANIFEST_ARROW
-        )
+        return pa.Table.from_batches([mf.manifest_batch([row])])
 
     result = stripes.groupBy("partition_id").applyInArrow(assemble, mf.MANIFEST_DDL)
     conf = spark.conf
@@ -2709,7 +2659,7 @@ def metadata_agg(
         bands = mf.incomplete_append_bands(out_dir)
         loose_names = [
             n for n in mf.loose_sidecar_names(out_dir)
-            if not any(lo <= _name_pid(n) < hi for lo, hi in bands)
+            if not any(lo <= mf.part_pid(n) < hi for lo, hi in bands)
         ]
         catalog = mf.segment_catalog(out_dir)
         # summary fast path: every cataloged segment carries a pre-merged
@@ -2727,7 +2677,7 @@ def metadata_agg(
             and mf.rollback_mask(out_dir) is None
         )
         if summaries_ok and loose_names:
-            loose_pids = [_name_pid(n) for n in loose_names]
+            loose_pids = [mf.part_pid(n) for n in loose_names]
             summaries_ok = not any(
                 int(e["min_pid"]) <= p <= int(e["max_pid"])
                 for e in catalog
@@ -2834,12 +2784,7 @@ def _member_stripes(row: dict) -> list[tuple[bytes, dict]]:
     """Explode one manifest member into (stripe_payload, dir_entry) pairs.
     Flat blocks ARE one stripe; striped blocks unwrap, keeping their own
     directory entries when present (else the member's block-level min/max)."""
-    codecs = json.loads(row["codecs"])
-    member_mm = {
-        c: [m["min"], m["max"]]
-        for c, m in codecs.items()
-        if m.get("min") is not None and m.get("max") is not None
-    }
+    member_mm = _minmax_dir(json.loads(row["codecs"]))
     with open(row["block_path"], "rb") as f:
         buf = memoryview(f.read())
     magic = bytes(buf[:4])
@@ -2966,13 +2911,10 @@ def compact_dataset(
     # column, constraints) — NOT input_fingerprint, which belongs to the
     # source's resume protocol, not the compacted copy
     src_payload = mf.read_schema_payload(src_dir) or {}
-    extras = {
-        k: v for k, v in src_payload.items()
-        if k in ("size_col", "constraints", "column_view", "zorder")
-    }
-    mf.write_schema(dst_dir, arrow_schema, json.dumps(spark_schema),
-                    extra=extras or None)
-    blocks_dir = os.path.join(dst_dir, mf.BLOCKS_DIR)
+    mf.write_schema(
+        dst_dir, arrow_schema, json.dumps(spark_schema),
+        extra=mf.carry_payload(src_payload, size_col=src_payload.get("size_col")),
+    )
 
     import pandas as pd
 
@@ -2991,7 +2933,7 @@ def compact_dataset(
                 masks = {int(k): v for k, v in (spec.get("masks") or {}).items()}
                 by_pid = mf.load_rows(src_dir, spec["pids"])
                 members = [by_pid[p] for p in spec["pids"]]
-                path = os.path.join(blocks_dir, f"part-{gid:06d}.rgb")
+                path = mf.block_path(dst_dir, gid)
                 row = {
                     "partition_id": gid,
                     "n_rows": sum(int(m["n_rows"]) for m in members)
@@ -3004,14 +2946,9 @@ def compact_dataset(
                     continue  # every row of the group deleted — no block
                 if mode == "concat" and not masks:
                     stripes = [s for m in members for s in _member_stripes(m)]
-                    dir_blob = json.dumps([d for _, d in stripes], default=str).encode()
-                    parts = [b"RGS2", struct.pack("<I", len(stripes))]
-                    parts.append(struct.pack("<Q", len(dir_blob)))
-                    parts.append(dir_blob)
-                    for blob, _ in stripes:
-                        parts.append(struct.pack("<Q", len(blob)))
-                        parts.append(blob)
-                    crc = _atomic_write(path, b"".join(parts))
+                    crc = _write_rgs2(
+                        path, [b for b, _ in stripes], [d for _, d in stripes]
+                    )
                     row["input_bytes"] = sum(int(m.get("input_bytes") or 0) for m in members)
                     row["codecs"] = json.dumps(
                         merge_column_metas([json.loads(m["codecs"]) for m in members]),
@@ -3049,10 +2986,7 @@ def compact_dataset(
                 row["output_bytes"] = int(os.path.getsize(path))
                 row["checksum"] = int(crc)
                 mf.write_sidecar(dst_dir, row)
-                yield pa.RecordBatch.from_pylist(
-                    [{k: row[k] for k in mf.MANIFEST_ARROW.names}],
-                    schema=mf.MANIFEST_ARROW,
-                )
+                yield mf.manifest_batch([row])
 
     src.mapInArrow(compactor, mf.MANIFEST_DDL).write.mode("overwrite").format("noop").save()
     if consolidate:
@@ -3272,13 +3206,6 @@ _SEGMENT_RGS_PER_SPEC = 8  # ~16k manifest rows per planning task
 _SIDECARS_PER_SPEC = 256
 
 
-def _name_pid(name: str) -> int:
-    try:
-        return int(name[len("part-"):-len(".json")])
-    except ValueError:
-        return -1
-
-
 def _manifest_scan_specs(
     out_dir: str,
     cols: list[str] | None = None,
@@ -3307,7 +3234,7 @@ def _manifest_scan_specs(
     loose_pids: list[int] = []
     loose_names: list[str] = []
     for name in mf.loose_sidecar_names(out_dir):
-        pid = _name_pid(name)
+        pid = mf.part_pid(name)
         if any(lo <= pid < hi for lo, hi in bands):
             continue
         if keep is not None and pid not in keep:
@@ -3577,7 +3504,7 @@ def decode_table(
         for batch in batches:
             crcs = batch.column(1).to_pylist()
             for i, path in enumerate(batch.column(0).to_pylist()):  # per-partition only
-                raw_mask = masks.get(_pid_of_block_path(path)) if masks else None
+                raw_mask = masks.get(mf.part_pid(path)) if masks else None
                 # a masked block decodes ALL stripes (positions are
                 # block-absolute; stripe skipping would shift offsets) —
                 # the driver-side exact filter still applies afterwards

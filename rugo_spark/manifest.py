@@ -23,7 +23,7 @@ CODEC_PLANS_FILE = "_codec_plans.json"
 MANIFEST_DIR = "manifest"
 BLOCKS_DIR = "blocks"
 
-# Spark-side manifest row schema (applyInArrow output)
+# Spark-side manifest row schema (the block writers' output rows)
 MANIFEST_DDL = (
     "partition_id int, n_rows long, n_tokens long, input_bytes long, "
     "output_bytes long, block_path string, checksum long, codecs string"
@@ -42,29 +42,49 @@ MANIFEST_ARROW = pa.schema(
 )
 
 
+def manifest_batch(rows: list[dict]) -> pa.RecordBatch:
+    """Sidecar rows → one batch of the Spark-side manifest row schema."""
+    return pa.RecordBatch.from_pylist(
+        [{k: r[k] for k in MANIFEST_ARROW.names} for r in rows], schema=MANIFEST_ARROW
+    )
+
+
 def write_schema(
     out_dir: str, arrow_schema: pa.Schema, spark_schema_json: str, extra: dict | None = None
 ) -> None:
-    os.makedirs(out_dir, exist_ok=True)
-    payload = {
+    write_schema_payload(out_dir, {
         "arrow_schema_b64": base64.b64encode(arrow_schema.serialize().to_pybytes()).decode(),
         "spark_schema": json.loads(spark_schema_json),
         **(extra or {}),
-    }
-    tmp = os.path.join(out_dir, SCHEMA_FILE + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(payload, f)
-    os.replace(tmp, os.path.join(out_dir, SCHEMA_FILE))
+    })
 
 
 def write_schema_payload(out_dir: str, payload: dict) -> None:
-    """Atomic raw replace of ``_schema.json`` — used by reclaim_append to
-    restore the stashed pre-append schema after a crashed evolving append."""
+    """Atomic raw replace of ``_schema.json`` — also used by reclaim_append
+    to restore the stashed pre-append schema after a crashed evolving
+    append."""
     os.makedirs(out_dir, exist_ok=True)
     tmp = os.path.join(out_dir, SCHEMA_FILE + ".tmp")
     with open(tmp, "w") as f:
         json.dump(payload, f)
     os.replace(tmp, os.path.join(out_dir, SCHEMA_FILE))
+
+
+# _schema.json keys added after the encode that first wrote the file (CHECK
+# constraints, the rename/drop column view, a z-order spec): every rewrite
+# of _schema.json carries them forward
+DURABLE_PAYLOAD_KEYS = ("constraints", "column_view", "zorder")
+
+
+def carry_payload(prior: dict | None, **extra) -> dict:
+    """``write_schema`` extras for a rewrite of ``_schema.json``: ``extra``
+    (None values dropped) plus every durable key of the ``prior`` payload
+    that ``extra`` does not set."""
+    out = {k: v for k, v in extra.items() if v is not None}
+    for k in DURABLE_PAYLOAD_KEYS:
+        if k in (prior or {}) and k not in out:
+            out[k] = prior[k]
+    return out
 
 
 def read_schema_payload(out_dir: str) -> dict | None:
@@ -181,15 +201,39 @@ def sidecar_path(out_dir: str, partition_id: int) -> str:
     return os.path.join(out_dir, MANIFEST_DIR, f"part-{partition_id:06d}.json")
 
 
+def block_path(out_dir: str, partition_id: int) -> str:
+    return os.path.join(out_dir, BLOCKS_DIR, f"part-{partition_id:06d}.rgb")
+
+
+def part_pid(name: str) -> int:
+    """Partition id of a sidecar or block file (a bare name or a path);
+    -1 for any other name, including in-progress temp files."""
+    stem, ext = os.path.splitext(os.path.basename(name))
+    if not stem.startswith("part-") or ext not in (".json", ".rgb"):
+        return -1
+    try:
+        return int(stem[len("part-"):])
+    except ValueError:
+        return -1
+
+
+def inprogress_path(path: str) -> str:
+    """Temp name to write ``path`` through before renaming it into place.
+    Attempt-unique: with speculative execution two attempts of one task may
+    write concurrently, and a SHARED temp name would have them interleave
+    into one inode and publish a torn file."""
+    import uuid
+
+    return f"{path}.inprogress.{uuid.uuid4().hex[:12]}"
+
+
 def write_sidecar(out_dir: str, row: dict) -> None:
     """Atomic (temp + rename) — a crash mid-write never yields a torn
     sidecar, and the attempt-unique temp name keeps concurrent speculative
     attempts of one task from interleaving into a shared inode."""
-    import uuid
-
     path = sidecar_path(out_dir, row["partition_id"])
     os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = f"{path}.inprogress.{uuid.uuid4().hex[:12]}"
+    tmp = inprogress_path(path)
     with open(tmp, "w") as f:
         json.dump(row, f)
     os.replace(tmp, path)
@@ -621,9 +665,8 @@ def iter_spec_rows(spec: dict):
                     yield json.load(f)
                 continue
             except (json.JSONDecodeError, OSError):
-                try:
-                    pid = int(name[len("part-"):-len(".json")])
-                except ValueError:
+                pid = part_pid(name)
+                if pid < 0:
                     continue
                 import pyarrow.parquet as pq
 
@@ -1271,9 +1314,8 @@ def rollback_to_snapshot(out_dir: str, snapshot_id: int) -> dict:
         mdir = os.path.join(out_dir, MANIFEST_DIR)
         if os.path.isdir(mdir):
             for name in loose_sidecar_names(out_dir):
-                try:
-                    pid = int(name[len("part-"):-len(".json")])
-                except ValueError:
+                pid = part_pid(name)
+                if pid < 0:
                     continue
                 if pid not in keep_set:
                     try:
@@ -1284,11 +1326,8 @@ def rollback_to_snapshot(out_dir: str, snapshot_id: int) -> dict:
         bdir = os.path.join(out_dir, BLOCKS_DIR)
         if os.path.isdir(bdir):
             for name in os.listdir(bdir):
-                if not (name.startswith("part-") and name.endswith(".rgb")):
-                    continue
-                try:
-                    pid = int(name[len("part-"):-len(".rgb")])
-                except ValueError:
+                pid = part_pid(name)
+                if pid < 0:
                     continue
                 if pid not in keep_set:
                     try:

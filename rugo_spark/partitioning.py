@@ -27,9 +27,10 @@ size, ≤2²⁰).  Up to ``_DRIVER_MAP_LIMIT`` rows it is finished on the driver
 (sort + exclusive cumsum in numpy — catalog-stats scale, one Spark job
 total); above that, a distributed running-sum window + localCheckpoint keeps
 the driver out of the loop.  Either way the map is broadcast-joined back, so
-the single ``groupBy(partition_id)`` shuffle feeding ``applyInArrow`` is the
-only data movement in the encode job.  AQE cannot rebalance a Python
-grouped-map stage, hence explicit.
+the single ``repartition(n, __rugo_pid)`` shuffle feeding the block writer
+is the only data movement in the encode job.  Its explicit task count keeps
+AQE's byte-targeted coalescer, which is blind to Python-side encode cost,
+off that stage.
 """
 
 from __future__ import annotations

@@ -38,10 +38,19 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 from pyspark.sql import SparkSession
 
 from rugo_spark import manifest as mf
+
+
+def _publish_copy(src: str, dst: str) -> None:
+    """Byte-copy ``src`` to ``dst`` through an attempt-unique temp file, so
+    two speculative attempts copying one block never share a temp inode."""
+    tmp = mf.inprogress_path(dst)
+    shutil.copyfile(src, tmp)
+    os.replace(tmp, dst)
 
 
 def recluster_dataset(
@@ -144,18 +153,13 @@ def recluster_dataset(
             )
 
     mf.clear_manifest(dst_dir)
-    extras = {
-        k: v for k, v in payload.items()
-        if k in ("size_col", "constraints", "column_view", "zorder")
-    }
     mf.write_schema(dst_dir, arrow_schema, json.dumps(spark_schema),
-                    extra=extras or None)
+                    extra=mf.carry_payload(payload, size_col=size_col))
     # a future recluster/sorted-resume must see this is NOT a resumable
     # range encode (its boundaries are implicit in the block stats)
     mf.write_plan(dst_dir, {"mode": "recluster", "key_col": sort_key,
                             "num_partitions": n_base + len(tail_bounds)})
-    blocks_dir = os.path.join(dst_dir, mf.BLOCKS_DIR)
-    os.makedirs(blocks_dir, exist_ok=True)
+    os.makedirs(os.path.join(dst_dir, mf.BLOCKS_DIR), exist_ok=True)
     schema_bytes = arrow_schema.serialize().to_pybytes()
     sc = spark.sparkContext
     maxes_bc = sc.broadcast(maxes)
@@ -235,9 +239,7 @@ def recluster_dataset(
 
             gid = int(key[0].as_py())
             if os.path.exists(mf.sidecar_path(dst_dir, gid)):
-                return pa.Table.from_batches([], schema=pa.schema(
-                    [(n, mf.MANIFEST_ARROW.field(n).type) for n in mf.MANIFEST_ARROW.names]
-                ))
+                return mf.MANIFEST_ARROW.empty_table()
             tbl = tbl.drop_columns("__rugo_gid")
             entry = base_bc.value.get(gid)
             if entry is not None:
@@ -257,18 +259,12 @@ def recluster_dataset(
                 # null-fills the tail, so both sides share the full schema
                 tbl = pa.concat_tables([base_tbl, tbl], promote_options="default")
             tbl = tbl.sort_by(sort_key)
-            out_path = os.path.join(blocks_dir, f"part-{gid:06d}.rgb")
             row = encode_block_row(
-                tbl, out_path, gid, sort_key=sort_key, size_col=size_col,
-                presorted=True,
+                tbl, mf.block_path(dst_dir, gid), gid, sort_key=sort_key,
+                size_col=size_col, presorted=True,
             )
             mf.write_sidecar(dst_dir, row)
-            return pa.Table.from_pylist(
-                [{k: row[k] for k in mf.MANIFEST_ARROW.names}],
-                schema=pa.schema(
-                    [(n, mf.MANIFEST_ARROW.field(n).type) for n in mf.MANIFEST_ARROW.names]
-                ),
-            )
+            return pa.Table.from_batches([mf.manifest_batch([row])])
 
         folded = (
             bands_df.groupBy("__rugo_gid")
@@ -276,11 +272,7 @@ def recluster_dataset(
             .collect()
         )
         rewritten_rows = sum(int(r["n_rows"]) for r in folded) or 0
-        from rugo_spark.engine import _pid_of_block_path
-
-        gids_with_rows = {
-            _pid_of_block_path(r["block_path"]) for r in folded
-        }
+        gids_with_rows = {mf.part_pid(r["block_path"]) for r in folded}
 
     # ---- stage 2: untouched base blocks — byte-copy (or purge-rewrite
     # when masked), distributed ----
@@ -304,8 +296,6 @@ def recluster_dataset(
         ).repartition(min(len(copy_specs), sc.defaultParallelism * 4))
 
         def copier(batches):
-            import shutil as _sh
-
             from rugo_spark import deletes as _dl
             from rugo_spark.engine import encode_block_row, read_block_file
 
@@ -316,7 +306,7 @@ def recluster_dataset(
                     gid = int(spec["gid"])
                     if os.path.exists(mf.sidecar_path(dst_dir, gid)):
                         continue
-                    dst = os.path.join(blocks_dir, f"part-{gid:06d}.rgb")
+                    dst = mf.block_path(dst_dir, gid)
                     if spec["masked"]:
                         tbl = pa.Table.from_batches(
                             list(read_block_file(spec["src"], schema, None, None))
@@ -334,9 +324,7 @@ def recluster_dataset(
                         )
                         kind = "purged"
                     else:
-                        tmp = dst + ".tmp"
-                        _sh.copyfile(spec["src"], tmp)
-                        os.replace(tmp, dst)
+                        _publish_copy(spec["src"], dst)
                         row = dict(spec["row"])
                         row["partition_id"] = gid
                         row["block_path"] = dst

@@ -151,3 +151,44 @@ def test_recluster_refuses_unsorted_or_statless(spark, tmp_path):
     z = str(tmp_path / "z")
     recluster_dataset(spark, srt, z)
     assert decode_table(spark, z).count() == 1002
+
+
+def test_copy_publish_attempts_never_share_a_temp(tmp_path, monkeypatch):
+    """Two speculative attempts copying the same base block: both open their
+    copy before either renames, and the destination still ends up holding
+    exactly one complete payload (a shared temp name made the second
+    rename fail on a vanished file, or published an interleaved one)."""
+    import shutil
+    import threading
+
+    from rugo_spark.recluster import _publish_copy
+
+    src = tmp_path / "src.rgb"
+    payload = os.urandom(1 << 20)
+    src.write_bytes(payload)
+    dst = tmp_path / "blocks" / "part-000000.rgb"
+    dst.parent.mkdir()
+    both_copied = threading.Barrier(2)
+    real_copy = shutil.copyfile
+
+    def copy_then_wait(a, b):
+        real_copy(a, b)
+        both_copied.wait(timeout=30)
+
+    monkeypatch.setattr(shutil, "copyfile", copy_then_wait)
+    errors = []
+
+    def attempt():
+        try:
+            _publish_copy(str(src), str(dst))
+        except Exception as e:  # noqa: BLE001 — surfaced by the assert below
+            errors.append(e)
+
+    threads = [threading.Thread(target=attempt) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=60)
+    assert errors == []
+    assert dst.read_bytes() == payload
+    assert os.listdir(dst.parent) == [dst.name]  # no temp left behind
