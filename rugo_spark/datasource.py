@@ -10,9 +10,13 @@ single data byte is opened — the same pruning surface ``decode_table`` uses,
 now reachable from ``spark.read``/``spark.sql`` over a registered format.
 Pruning is conservative: every pushed filter is also RETURNED to Spark
 ("partially pushed" per the API contract), so correctness never depends on
-the skip tests.  Writes are the shuffle-free map-only encode (one block per
-input split, sidecars committed only on job success); a dataset written here
-is byte-compatible with ``encode_table``/``decode_table`` and vice versa.
+the skip tests.  Partitions are listed through ``deletes.consistent_view``
+and each block decodes through ``engine.read_block_masked`` — the same view
+and block read ``decode_table`` uses, so both surfaces return the same rows
+(delete masks applied, checksums verified on request).  Writes are the
+shuffle-free map-only encode (one block per input split, sidecars committed
+only on job success); a dataset written here is byte-compatible with
+``encode_table``/``decode_table`` and vice versa.
 
 Functional parity note: the reference exposes its reader as a *library*
 (``rugo.parquet.read_metadata``); this module is the Spark-native equivalent
@@ -143,27 +147,17 @@ class RugoReader(DataSourceReader):
             yield f
 
     def partitions(self):
+        from functools import partial
+
         from rugo_spark import deletes as dl
         from rugo_spark import manifest as mf
         from rugo_spark.engine import _sidecar_keep
 
         parts = []
         for root in self.roots:
-            # consistent lifecycle view (decode_table's loop): the mask list
-            # and the partition listing must come from one commit state — a
-            # MERGE flip between the two reads would surface its band
-            # without its riding masks, or the masks without the band
-            def _names() -> list[str]:
-                if not os.path.isdir(os.path.join(root, dl.DELETES_DIR)):
-                    return []
-                return dl.visible_delete_files(root)
-
-            for _ in range(4):
-                names = _names()
-                rows = mf.visible_partitions(root)
-                if _names() == names:
-                    break
-            masks: dict = dl.load_raw(root, names) if names else {}
+            # the mask list and the partition listing from one commit state
+            names, rows = dl.consistent_view(root, partial(mf.visible_partitions, root))
+            masks = dl.load_raw(root, names)
             for row in rows:
                 if not _sidecar_keep(row, self.filters or None):
                     continue
@@ -183,44 +177,20 @@ class RugoReader(DataSourceReader):
         if not partition.block_path:
             return
         import pyarrow as pa
-        import zlib
 
-        from rugo_spark.engine import decode_block_payload, read_block_file
+        from rugo_spark import evolution as evo
+        from rugo_spark.engine import read_block_masked
 
         schema = pa.ipc.read_schema(pa.py_buffer(self._schema_bytes))
         order = self.columns if self.columns is not None else list(schema.names)
-        # a masked block decodes ALL stripes (delete positions are
-        # block-absolute; stripe skipping would shift offsets).  Safe:
-        # pushFilters returned every filter, so Spark re-applies them.
-        stripe_filters = None if partition.mask else (self.filters or None)
-        if self.verify:
-            # decode straight from the verified payload — no second file read
-            with open(partition.block_path, "rb") as f:
-                payload = f.read()
-            if zlib.crc32(payload) != partition.checksum:
-                raise IOError(f"checksum mismatch for {partition.block_path}")
-            batches = decode_block_payload(
-                memoryview(payload), schema, columns=self.columns,
-                filters=stripe_filters,
-            )
-        else:
-            batches = read_block_file(
-                partition.block_path, schema, columns=self.columns,
-                filters=stripe_filters,
-            )
-        if partition.mask:
-            from rugo_spark import deletes as dl
-
-            batches = dl.apply_mask(
-                batches, dl.union_positions(list(partition.mask))
-            )
+        # stripe skipping is only a skip test: pushFilters returned every
+        # filter, so Spark re-applies them on the surviving rows
+        batches = read_block_masked(
+            partition.block_path, schema, self.columns, self.filters or None,
+            partition.mask, partition.checksum if self.verify else None,
+        )
         for batch in batches:
-            batch = batch.select(order)
-            if self._p2l:
-                batch = batch.rename_columns(
-                    [self._p2l.get(c, c) for c in batch.schema.names]
-                )
-            yield batch
+            yield evo.to_logical(batch.select(order), self._p2l)
 
 
 @dataclass
@@ -619,29 +589,17 @@ class RugoCDCStreamReader(DataSourceStreamReader):
     def read(self, partition: RugoCDCPartition) -> Iterator:
         import pyarrow as pa
 
-        from rugo_spark import deletes as dl
-        from rugo_spark.engine import read_block_file
+        from rugo_spark import evolution as evo
+        from rugo_spark.engine import read_block_masked, read_block_rows
 
         schema = pa.ipc.read_schema(pa.py_buffer(self._schema_bytes))
-        # no stripe skipping: delete positions are block-absolute
-        batches = read_block_file(partition.block_path, schema, self._live, None)
-        if partition.kind == "insert":
-            if partition.mask:
-                batches = dl.apply_mask(
-                    batches, dl.union_positions(list(partition.mask))
-                )
-            label = "insert"
+        path, label = partition.block_path, partition.kind
+        if label == "insert":
+            batches = read_block_masked(path, schema, self._live, None, partition.mask)
         else:
-            enc, data, n_rows = partition.mask[0]
-            pos = dl.decode_positions(enc, data, int(n_rows))
-            tbl = pa.Table.from_batches(list(batches))
-            batches = tbl.take(pa.array(pos.astype("int64"))).to_batches()
-            label = "delete"
+            batches = read_block_rows(path, schema, self._live, partition.mask[0]).to_batches()
         for batch in batches:
-            if self._p2l:
-                batch = batch.rename_columns(
-                    [self._p2l.get(c, c) for c in batch.schema.names]
-                )
+            batch = evo.to_logical(batch, self._p2l)
             if batch.num_rows:
                 yield pa.RecordBatch.from_arrays(
                     list(batch.columns)

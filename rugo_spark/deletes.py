@@ -150,31 +150,62 @@ def visible_delete_files(out_dir: str, snapshot_id: int | None = None) -> list[s
 
 def load_masks(out_dir: str, names: list[str]) -> dict[int, np.ndarray]:
     """pid → sorted uint32 deleted positions, unioned across files."""
-    masks: dict[int, np.ndarray] = {}
+    return {pid: union_positions(raw) for pid, raw in load_raw(out_dir, names).items()}
+
+
+def mask_index(out_dir: str, names: list[str]) -> dict[int, dict]:
+    """pid → ``{"entries": [(enc, data_b64, n_rows), …], "rows", "tokens"}``
+    over the delete files ``names``: the still-compressed mask entries (the
+    right shape to BROADCAST to decode tasks — a bitmap stays zstd'd until
+    the one task that reads its block) plus the pid's deleted row and token
+    totals (exact: writers keep files position-disjoint per pid)."""
+    index: dict[int, dict] = {}
     for name in names:
-        payload = read_delete_file(out_dir, name)
-        for e in payload.get("entries", []):
-            pid = int(e["pid"])
-            pos = decode_positions(e["enc"], e.get("data", ""), int(e["n_rows"]))
-            if pid in masks:
-                masks[pid] = np.union1d(masks[pid], pos).astype(np.uint32)
-            else:
-                masks[pid] = pos
-    return masks
+        for e in read_delete_file(out_dir, name).get("entries", []):
+            m = index.setdefault(int(e["pid"]), {"entries": [], "rows": 0, "tokens": 0})
+            m["entries"].append((e["enc"], e.get("data", ""), int(e["n_rows"])))
+            m["rows"] += int(e["n_deleted"])
+            m["tokens"] += int(e.get("deleted_tokens") or 0)
+    return index
 
 
 def load_raw(out_dir: str, names: list[str]) -> dict[int, list[tuple]]:
-    """pid → [(enc, data_b64, n_rows), …] — the still-compressed mask
-    entries, the right shape to BROADCAST to decode tasks (a bitmap stays
-    zstd'd until the one task that reads its block)."""
-    raw: dict[int, list[tuple]] = {}
-    for name in names:
-        payload = read_delete_file(out_dir, name)
-        for e in payload.get("entries", []):
-            raw.setdefault(int(e["pid"]), []).append(
-                (e["enc"], e.get("data", ""), int(e["n_rows"]))
-            )
-    return raw
+    """pid → [(enc, data_b64, n_rows), …] — :func:`mask_index`'s entries."""
+    return {pid: m["entries"] for pid, m in mask_index(out_dir, names).items()}
+
+
+# re-reads of the delete-file list before a torn lifecycle view is an error
+_VIEW_ATTEMPTS = 4
+
+
+def _visible_names(out_dir: str, snapshot_id: int | None) -> list[str]:
+    if not os.path.isdir(os.path.join(out_dir, DELETES_DIR)):
+        return []  # never deleted from: skip the log + marker reads
+    return visible_delete_files(out_dir, snapshot_id)
+
+
+def consistent_view(out_dir: str, listing, snapshot_id: int | None = None):
+    """``(visible delete-file names, listing())`` from ONE commit state.
+
+    A reader's mask list and its partition listing must agree: a MERGE flip
+    between the two reads would surface its new band WITHOUT its riding
+    masks (both row versions) or the masks WITHOUT the band (neither).
+    ``listing`` captures the partition view driver-side; re-reading the
+    visible file list after it detects any commit that landed mid-read, and
+    the read retries until the list is stable.  Lifecycle commits are rare,
+    so a list that changes on every re-read raises instead of handing back
+    a torn view.  Snapshot reads are frozen entries: stable by
+    construction."""
+    for _ in range(_VIEW_ATTEMPTS):
+        names = _visible_names(out_dir, snapshot_id)
+        result = listing()
+        if _visible_names(out_dir, snapshot_id) == names:
+            return names, result
+    raise RuntimeError(
+        f"{out_dir}: the visible delete-file list changed on each of "
+        f"{_VIEW_ATTEMPTS} re-reads (lifecycle commits landing mid-read) — "
+        "refusing to read a torn view; retry once the writers settle"
+    )
 
 
 def union_positions(raw_entries: list[tuple]) -> np.ndarray:
@@ -277,29 +308,23 @@ def consolidate_delete_files(out_dir: str) -> dict:
         if len(names) < 2:
             return {"files_before": len(names), "files_after": len(names),
                     "n_deleted": 0, "snapshot_id": None}
-        per_pid: dict[int, dict] = {}
-        for name in names:
-            payload = read_delete_file(out_dir, name)
-            for e in payload.get("entries", []):
-                pid = int(e["pid"])
-                cur = per_pid.setdefault(
-                    pid, {"n_rows": int(e["n_rows"]), "raw": [], "tokens": 0}
+        per_pid = mask_index(out_dir, names)
+        for pid, m in per_pid.items():
+            n_rows = {n for _, _, n in m["entries"]}
+            if len(n_rows) > 1:
+                raise ValueError(
+                    f"delete files disagree on pid {pid} row count "
+                    f"({' vs '.join(map(str, sorted(n_rows)))}) — refusing to "
+                    "consolidate inconsistent masks"
                 )
-                if cur["n_rows"] != int(e["n_rows"]):
-                    raise ValueError(
-                        f"delete files disagree on pid {pid} row count "
-                        f"({cur['n_rows']} vs {e['n_rows']}) — refusing to "
-                        "consolidate inconsistent masks"
-                    )
-                cur["raw"].append((e["enc"], e.get("data", ""), int(e["n_rows"])))
-                cur["tokens"] += int(e.get("deleted_tokens") or 0)
         entries = []
         for pid in sorted(per_pid):
             m = per_pid[pid]
-            pos = union_positions(m["raw"])
-            enc, data = encode_positions(pos, m["n_rows"])
+            n_rows = m["entries"][0][2]
+            pos = union_positions(m["entries"])
+            enc, data = encode_positions(pos, n_rows)
             entries.append({
-                "pid": pid, "n_rows": m["n_rows"], "n_deleted": int(len(pos)),
+                "pid": pid, "n_rows": n_rows, "n_deleted": int(len(pos)),
                 "deleted_tokens": int(m["tokens"]), "enc": enc, "data": data,
             })
         fp = hashlib.sha256("\n".join(names).encode()).hexdigest()[:16]

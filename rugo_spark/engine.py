@@ -26,6 +26,7 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
 
+from rugo_spark import deletes as dl
 from rugo_spark import manifest as mf
 from rugo_spark.block import KIND_DEC128, KIND_DEC256, decode_array, encode_array
 
@@ -427,6 +428,58 @@ def decode_block_payload(
         yield _decode_flat_block(buf, schema, columns)
 
 
+class BlockChecksumError(IOError):
+    """A block's bytes do not match the crc32 its manifest row records."""
+
+
+def read_block_masked(
+    path: str,
+    schema: pa.Schema,
+    columns: list[str] | None,
+    filters: list[tuple] | None,
+    mask,
+    checksum: int | None = None,
+):
+    """The block read every reader shares: decode ``path`` (column-pruned,
+    stripe-skipped on ``filters``) and drop the rows named by its raw
+    delete-mask entries ``mask`` (``deletes.load_raw`` shape; empty or None
+    = unmasked).
+
+    A masked block decodes ALL stripes: delete positions are block-absolute,
+    so stripe skipping would shift them (callers re-apply their filters
+    exactly on the surviving rows).  With ``checksum`` the payload is read
+    once and checked before any batch exists — a mismatch raises
+    :class:`BlockChecksumError` from this call — and decode runs from those
+    bytes.  Returns a RecordBatch iterator."""
+    if mask:
+        filters = None
+    if checksum is None:
+        batches = read_block_file(path, schema, columns, filters)
+    else:
+        with open(path, "rb") as f:
+            payload = f.read()
+        got = zlib.crc32(payload)
+        if got != checksum:
+            raise BlockChecksumError(
+                f"checksum mismatch for {path}: block corrupted "
+                f"(manifest {checksum}, file {got})"
+            )
+        batches = decode_block_payload(memoryview(payload), schema, columns, filters)
+    if mask:
+        batches = dl.apply_mask(batches, dl.union_positions(list(mask)))
+    return batches
+
+
+def read_block_rows(
+    path: str, schema: pa.Schema, columns: list[str] | None, entry: tuple
+) -> pa.Table:
+    """The rows of ``path`` at one raw mask entry's positions — the delete
+    side of a change feed (whole-block decode: positions are absolute)."""
+    pos = dl.decode_positions(*entry)
+    tbl = pa.Table.from_batches(list(read_block_file(path, schema, columns, None)))
+    return tbl.take(pa.array(pos.astype("int64")))
+
+
 # ------------------------------------------------------------- encode job
 
 def _conf_get(conf, key: str, default: str = "") -> str:
@@ -658,6 +711,37 @@ def _block_writer(spark, out_dir, sort_key, size_col, plans, pid_base: int | Non
     return encoder
 
 
+def _check_resume_plan(
+    out_dir: str, resumed: dict, num_partitions: int | None, range_key: str | None = None
+) -> None:
+    """Refuse to resume ``out_dir``'s persisted plan with a call that would
+    not reproduce it.  ``range_key`` is the sorted encode's key column; None
+    is the grouped encode, which must not resume a range plan."""
+    mode = resumed.get("mode")
+    if range_key is None and mode == "range":
+        raise ValueError(
+            f"{out_dir} was written by encode_table_sorted (range plan); "
+            "resume it with encode_table_sorted or clear the dataset"
+        )
+    if range_key is not None and mode != "range":
+        raise ValueError(
+            f"{out_dir} was written by a different encode path "
+            f"(plan mode {mode!r}); resume it with the same "
+            "function or clear the dataset"
+        )
+    if range_key is not None and resumed.get("key_col") != range_key:
+        raise ValueError(
+            f"refusing to resume {out_dir} with key_col={range_key!r}: the "
+            f"dataset was range-planned on {resumed.get('key_col')!r}"
+        )
+    if num_partitions is not None and num_partitions != resumed.get("num_partitions"):
+        raise ValueError(
+            f"refusing to resume {out_dir} with num_partitions={num_partitions}: "
+            f"the dataset was planned with {resumed.get('num_partitions')} "
+            "(mixing layouts would duplicate or drop rows)"
+        )
+
+
 def encode_table_sorted(
     df: DataFrame,
     out_dir: str,
@@ -692,23 +776,7 @@ def encode_table_sorted(
     # range plan that would then block its legitimate resume
     resumed = mf.read_plan_checked(out_dir, require=True)
     if resumed is not None:
-        if resumed.get("mode") != "range":
-            raise ValueError(
-                f"{out_dir} was written by a different encode path "
-                f"(plan mode {resumed.get('mode')!r}); resume it with the same "
-                "function or clear the dataset"
-            )
-        if resumed.get("key_col") != key_col:
-            raise ValueError(
-                f"refusing to resume {out_dir} with key_col={key_col!r}: the "
-                f"dataset was range-planned on {resumed.get('key_col')!r}"
-            )
-        if num_partitions is not None and num_partitions != resumed.get("num_partitions"):
-            raise ValueError(
-                f"refusing to resume {out_dir} with num_partitions={num_partitions}: "
-                f"the dataset was planned with {resumed.get('num_partitions')} "
-                "(mixing layouts would duplicate or drop rows)"
-            )
+        _check_resume_plan(out_dir, resumed, num_partitions, range_key=key_col)
         n = int(resumed["num_partitions"])
         bounds = resumed["boundaries"]
     else:
@@ -1146,8 +1214,6 @@ def reclaim_append(out_dir: str, fingerprint: str | None = None) -> dict:
         for name in m.get("delete_files") or []:
             # a crashed MERGE's delete file rides the (incomplete) marker —
             # it was never visible; drop it with the band
-            from rugo_spark import deletes as dl
-
             try:
                 os.remove(os.path.join(out_dir, dl.DELETES_DIR, name))
             except OSError:
@@ -1222,8 +1288,6 @@ def _predicate_mask_entries(
     candidate_pids)`` — only kilobyte entries reach the driver.
     ``exclude_base``: an UPDATE's own append band (its replacement rows
     match the predicate by construction and must never be re-masked)."""
-    from rugo_spark import deletes as dl
-
     arrow_schema, spark_schema_json = mf.read_schema(out_dir)
     from pyspark.sql.types import StructType as _ST
 
@@ -1340,8 +1404,6 @@ def delete_where(
     single-writer (consolidation lock) to keep concurrent delete commits
     from double-counting overlaps.  Returns ``{"n_deleted", "n_blocks",
     "delete_file", "snapshot"}``."""
-    from rugo_spark import deletes as dl
-
     if not filters:
         raise ValueError("delete_where requires at least one (col, op, value) filter")
     arrow_schema, _ = mf.read_schema(out_dir)
@@ -1526,8 +1588,6 @@ def _matched_key_mask_entries(
     import pyarrow.compute as pc
     import pyspark.sql.functions as F
     from pyspark.sql.types import StructType
-
-    from rugo_spark import deletes as dl
 
     arrow_schema, _ = mf.read_schema(out_dir)
     payload_schema = mf.read_schema_payload(out_dir) or {}
@@ -1723,8 +1783,6 @@ def delete_keys(
 
     import pyspark.sql.functions as F
 
-    from rugo_spark import deletes as dl
-
     arrow_schema, _ = mf.read_schema(out_dir)
     from rugo_spark import evolution as evo
 
@@ -1803,8 +1861,6 @@ def update_where(
 
     Returns ``{"n_updated", "delete_file", "snapshot"}``."""
     import pyspark.sql.functions as F
-
-    from rugo_spark import deletes as dl
 
     if not filters:
         raise ValueError("update_where requires at least one (col, op, value) filter")
@@ -1949,8 +2005,6 @@ def merge_table(
     duplicate keys WITHIN ``df`` are the caller's responsibility.
 
     Returns ``{"n_replaced", "n_appended", "delete_file", "snapshot"}``."""
-    from rugo_spark import deletes as dl
-
     spark = df.sparkSession
     arrow_schema, _ = mf.read_schema(out_dir)
     # rename evolution: key_col is a LOGICAL name; _matched_key_mask_entries
@@ -2043,17 +2097,7 @@ def encode_table(
     cache_key = None
     prev_plan = resumed_plan
     if resumed_plan is not None:
-        if resumed_plan.get("mode") == "range":
-            raise ValueError(
-                f"{out_dir} was written by encode_table_sorted (range plan); "
-                "resume it with encode_table_sorted or clear the dataset"
-            )
-        if num_partitions is not None and num_partitions != resumed_plan.get("num_partitions"):
-            raise ValueError(
-                f"refusing to resume {out_dir} with num_partitions={num_partitions}: "
-                f"the dataset was planned with {resumed_plan.get('num_partitions')} "
-                "(mixing layouts would duplicate or drop rows)"
-            )
+        _check_resume_plan(out_dir, resumed_plan, num_partitions)
         num_partitions = None  # persisted plan wins on resume
     elif size_col is not None and _files_signature(df):
         # cache ONLY inputs with a file identity: a foreachBatch micro-batch
@@ -2414,17 +2458,15 @@ def _encode_precombine(
         mf.write_sidecar(out_dir, row)
         return pa.Table.from_batches([mf.manifest_batch([row])])
 
-    result = stripes.groupBy("partition_id").applyInArrow(assemble, mf.MANIFEST_DDL)
-    conf = spark.conf
-    prev = _conf_get(conf, "spark.sql.shuffle.partitions", "200")
-    prev_coalesce = _conf_get(conf, "spark.sql.adaptive.coalescePartitions.enabled", "true")
-    try:
-        conf.set("spark.sql.shuffle.partitions", str(num_partitions))
-        conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-        result.write.mode("overwrite").format("noop").save()
-    finally:
-        conf.set("spark.sql.shuffle.partitions", prev)
-        conf.set("spark.sql.adaptive.coalescePartitions.enabled", prev_coalesce)
+    # one reduce task per pid, pinned in the plan rather than the session
+    # confs: an explicit-count repartition is not coalesced by AQE, and its
+    # hash partitioning on partition_id already satisfies the grouping
+    result = (
+        stripes.repartition(int(num_partitions), "partition_id")
+        .groupBy("partition_id")
+        .applyInArrow(assemble, mf.MANIFEST_DDL)
+    )
+    result.write.mode("overwrite").format("noop").save()
     mf.commit_snapshot(out_dir, "encode")
     return manifest_df(spark, out_dir)
 
@@ -2645,13 +2687,6 @@ def metadata_agg(
             )
         cols = list(columns)
 
-    from rugo_spark import deletes as dl
-
-    def _visible_names() -> list[str]:
-        if not os.path.isdir(os.path.join(out_dir, dl.DELETES_DIR)):
-            return []
-        return dl.visible_delete_files(out_dir, snapshot_id)
-
     def _collect_partials(distributed):
         # torn append bands are invisible to stats, like every reader — band
         # filtering happens below (summary fast path), inside
@@ -2716,15 +2751,13 @@ def metadata_agg(
             if _rs is None or int(r["partition_id"]) in _rs
         ]
 
-    # consistent lifecycle view (same loop as decode_table): the partial
-    # stats and the delete-file list must reflect one commit state, or a
-    # MERGE flip mid-read double-counts (new band counted, riding masks
-    # unsubtracted) or under-counts (masks subtracted, band missing)
-    for _ in range(4):
-        names = _visible_names()
-        partials = _collect_partials(distributed)
-        if _visible_names() == names:
-            break
+    # the partial stats and the delete-file list must reflect one commit
+    # state, or a MERGE flip mid-read double-counts (new band counted,
+    # riding masks unsubtracted) or under-counts (masks subtracted, band
+    # missing)
+    names, partials = dl.consistent_view(
+        out_dir, lambda: _collect_partials(distributed), snapshot_id
+    )
 
     n_rows = sum(int(r["n_rows"]) for r in partials)
     n_tokens = sum(int(r.get("n_tokens") or 0) for r in partials)
@@ -2858,25 +2891,15 @@ def compact_dataset(
     # would leave stale higher-numbered sidecars (or cataloged segments)
     # that silently duplicate rows
     mf.clear_manifest(dst_dir)
-    rows = sorted(mf.visible_partitions(src_dir), key=lambda r: int(r["partition_id"]))
+    names, rows = dl.consistent_view(src_dir, lambda: mf.visible_partitions(src_dir))
+    rows = sorted(rows, key=lambda r: int(r["partition_id"]))
     if not rows:
         raise ValueError(f"nothing to compact: {src_dir} has no completed partitions")
     # row-level delete masks: compaction is where deletes get PHYSICALLY
     # purged (dst carries no mask files).  A masked member cannot concat —
     # stripe copy would resurrect its deleted rows — so its whole group
     # falls back to the rewrite kernel; unmasked groups keep disk-copy speed.
-    from rugo_spark import deletes as dl
-
-    src_masks: dict[int, dict] = {}
-    if os.path.isdir(os.path.join(src_dir, dl.DELETES_DIR)):
-        for name in dl.visible_delete_files(src_dir):
-            for e in dl.read_delete_file(src_dir, name).get("entries", []):
-                m = src_masks.setdefault(
-                    int(e["pid"]), {"entries": [], "tokens": 0, "rows": 0}
-                )
-                m["entries"].append((e["enc"], e.get("data", ""), int(e["n_rows"])))
-                m["tokens"] += int(e.get("deleted_tokens") or 0)
-                m["rows"] += int(e["n_deleted"])
+    src_masks = dl.mask_index(src_dir, names)
     arrow_schema, spark_schema = mf.read_schema(src_dir)
     groups: list[list[dict]] = [[]]
     acc = 0
@@ -2963,17 +2986,13 @@ def compact_dataset(
                         row["bloom_col"] = bloom_col
                         row["bloom"] = _bloom.union(member_blooms)
                 else:
-                    from rugo_spark import deletes as _dl
-
                     parts = []
                     for m in members:
-                        mb = read_block_file(m["block_path"], schema)
                         raw = masks.get(int(m["partition_id"]))
-                        if raw:  # block-absolute positions; no stripe skip
-                            mb = _dl.apply_mask(
-                                mb, _dl.union_positions(raw["entries"])
-                            )
-                        parts.extend(mb)
+                        parts.extend(read_block_masked(
+                            m["block_path"], schema, None, None,
+                            raw["entries"] if raw else (),
+                        ))
                     tbl = pa.Table.from_batches(parts, schema=schema)
                     if sort_key is not None:
                         tbl = tbl.sort_by(sort_key)
@@ -3363,7 +3382,16 @@ def decode_table(
     that snapshot (``manifest.snapshot_log``; the Iceberg as-of-snapshot
     analog).  Within a dataset dir partitions are append-only, so a
     snapshot is a pid-range set and planning simply restricts to it — both
-    plan paths, including whole-segment pruning of disjoint segments."""
+    plan paths, including whole-segment pruning of disjoint segments.
+
+    Each task decodes its blocks through :func:`read_block_masked`, the block
+    read every reader shares (delete masks, checksums, stripe skipping), and
+    the mask list and plan come from one commit state
+    (``deletes.consistent_view``)."""
+    if plan not in ("auto", "local", "distributed"):
+        raise ValueError(f"plan must be auto|local|distributed, got {plan!r}")
+    if on_corrupt not in ("error", "skip"):
+        raise ValueError(f"on_corrupt must be error|skip, got {on_corrupt!r}")
     if snapshot_id is not None:
         snapshot_id = mf.resolve_snapshot(out_dir, snapshot_id)  # tags ok
     keep_ranges = (
@@ -3377,8 +3405,6 @@ def decode_table(
             if keep_ranges is None
             else mf.intersect_ranges(keep_ranges, _restrict_ranges)
         )
-    from rugo_spark import deletes as dl
-
     arrow_schema, spark_schema_json = mf.read_schema(out_dir)
     from pyspark.sql.types import StructType
 
@@ -3419,11 +3445,6 @@ def decode_table(
     else:
         out_schema = full
     import pandas as pd
-
-    def _visible_names() -> list[str]:
-        if not os.path.isdir(os.path.join(out_dir, dl.DELETES_DIR)):
-            return []
-        return dl.visible_delete_files(out_dir, snapshot_id)
 
     def _build_plan(requested_tasks):
         """Driver-side capture of the partition view (both plan paths list
@@ -3475,22 +3496,12 @@ def decode_table(
             max(1, min(int(requested_tasks), 4096))
         )
 
-    # consistent lifecycle view: the delete-mask list and the partition
-    # listing must come from the same commit state — a MERGE flip between
-    # the two would surface its new band WITHOUT its riding masks (both row
-    # versions) or the masks WITHOUT the band (neither).  Both plan paths
-    # capture the pid universe driver-side inside _build_plan, so re-reading
-    # the visible file list after planning detects any commit that landed
-    # mid-read; retry until stable (bounded — lifecycle commits are rare).
-    # Snapshot reads are frozen entries: stable by construction.
-    for _ in range(4):
-        names = _visible_names()
-        man = _build_plan(num_tasks)
-        if _visible_names() == names:
-            break
+    # both plan paths capture the pid universe driver-side inside
+    # _build_plan, so the mask list and the plan come from one commit state
+    names, man = dl.consistent_view(out_dir, lambda: _build_plan(num_tasks), snapshot_id)
     if man is None:
         return _to_logical(spark.createDataFrame([], out_schema))
-    masks_raw: dict = dl.load_raw(out_dir, names) if names else {}
+    masks_raw = dl.load_raw(out_dir, names)
 
     decode_cols = (list(columns) + extra_filter_cols) if columns else None
     masks_bc = (
@@ -3498,45 +3509,23 @@ def decode_table(
     )
 
     def decoder(batches):
-        from rugo_spark import deletes as _dl
-
         masks = masks_bc.value if masks_bc is not None else {}
         for batch in batches:
             crcs = batch.column(1).to_pylist()
             for i, path in enumerate(batch.column(0).to_pylist()):  # per-partition only
-                raw_mask = masks.get(mf.part_pid(path)) if masks else None
-                # a masked block decodes ALL stripes (positions are
-                # block-absolute; stripe skipping would shift offsets) —
-                # the driver-side exact filter still applies afterwards
-                stripe_filters = None if raw_mask is not None else filters
-                if verify_checksums:
-                    # decode straight from the verified bytes — no 2nd read
-                    with open(path, "rb") as f:
-                        payload = f.read()
-                    got = zlib.crc32(payload)
-                    want = crcs[i]
-                    if want is not None and got != want:
-                        msg = (
-                            f"checksum mismatch for {path}: block corrupted "
-                            f"(manifest {want}, file {got})"
-                        )
-                        if on_corrupt == "skip":
-                            import sys as _sys
+                try:
+                    out_batches = read_block_masked(
+                        path, arrow_schema, decode_cols, filters,
+                        masks.get(mf.part_pid(path)) if masks else (),
+                        crcs[i] if verify_checksums else None,
+                    )
+                except BlockChecksumError as e:
+                    if on_corrupt != "skip":
+                        raise
+                    import sys as _sys
 
-                            print(f"rugo_spark: QUARANTINED {msg}", file=_sys.stderr)
-                            continue
-                        raise IOError(msg)
-                    out_batches = decode_block_payload(
-                        memoryview(payload), arrow_schema, decode_cols, stripe_filters
-                    )
-                else:
-                    out_batches = read_block_file(
-                        path, arrow_schema, decode_cols, stripe_filters
-                    )
-                if raw_mask is not None:
-                    out_batches = _dl.apply_mask(
-                        out_batches, _dl.union_positions(raw_mask)
-                    )
+                    print(f"rugo_spark: QUARANTINED {e}", file=_sys.stderr)
+                    continue
                 yield from out_batches
 
     out = man.mapInArrow(decoder, out_schema)
@@ -3591,8 +3580,6 @@ def cdc_window(
     mask positions shrank — the log was rewritten, the diff is
     undefined)."""
     import numpy as np
-
-    from rugo_spark import deletes as dl
 
     log = mf.snapshot_log(out_dir, strict=True)
     if not log:
@@ -3672,11 +3659,7 @@ def read_changes(
 
     Raises if the window crosses a rollback (pid ranges or mask positions
     shrank — the log was rewritten, the diff is undefined)."""
-    import base64 as _b64
-
     from pyspark.sql.types import StringType, StructField, StructType
-
-    from rugo_spark import deletes as dl
 
     log = mf.snapshot_log(out_dir, strict=True)
     if not log:
@@ -3754,23 +3737,16 @@ def read_changes(
         )
 
         def deleted_rows(batches):
-            from rugo_spark import deletes as _dl
-
             schema = pa.ipc.read_schema(pa.py_buffer(schema_bytes))
             for batch in batches:
                 for path, enc, data, n_rows in zip(
                     batch.column(0).to_pylist(), batch.column(1).to_pylist(),
                     batch.column(2).to_pylist(), batch.column(3).to_pylist(),
                 ):
-                    pos = _dl.decode_positions(enc, data, int(n_rows))
-                    tbl = pa.Table.from_batches(
-                        list(read_block_file(path, schema, _live_phys, None))
+                    taken = evo.to_logical(
+                        read_block_rows(path, schema, _live_phys, (enc, data, n_rows)),
+                        _p2l,
                     )
-                    taken = tbl.take(pa.array(pos.astype("int64")))
-                    if _p2l:
-                        taken = taken.rename_columns(
-                            [_p2l.get(c, c) for c in taken.schema.names]
-                        )
                     taken = taken.append_column(
                         "_change_type",
                         pa.array(["delete"] * taken.num_rows, type=pa.string()),

@@ -101,6 +101,14 @@ def translate_filters(filters: list | None, l2p: dict) -> list | None:
     return out
 
 
+def to_logical(batch, p2l: dict):
+    """A decoded RecordBatch/Table with physical column names renamed to
+    their logical names (``p2l`` from :func:`maps`; empty = no-op)."""
+    if not p2l:
+        return batch
+    return batch.rename_columns([p2l.get(c, c) for c in batch.schema.names])
+
+
 def _identifier_in(expr: str, name: str) -> bool:
     return re.search(rf"(?<![A-Za-z0-9_`]){re.escape(name)}(?![A-Za-z0-9_])",
                      expr) is not None or f"`{name}`" in expr

@@ -53,6 +53,16 @@ def _publish_copy(src: str, dst: str) -> None:
     os.replace(tmp, dst)
 
 
+def _masked_table(path: str, schema, raw):
+    """One source block as a table, its delete mask (raw entries) applied."""
+    import pyarrow as pa
+
+    from rugo_spark.engine import read_block_masked
+
+    batches = list(read_block_masked(path, schema, None, None, raw))
+    return pa.Table.from_batches(batches) if batches else schema.empty_table()
+
+
 def recluster_dataset(
     spark: SparkSession,
     src_dir: str,
@@ -68,7 +78,6 @@ def recluster_dataset(
     import pyarrow as pa
 
     from rugo_spark import deletes as dl
-    from rugo_spark import engine as eng
 
     if os.path.realpath(src_dir) == os.path.realpath(dst_dir):
         raise ValueError("recluster_dataset: dst_dir must differ from src_dir")
@@ -95,9 +104,11 @@ def recluster_dataset(
         )
     payload = mf.read_schema_payload(src_dir) or {}
     size_col = payload.get("size_col")
-    rows = sorted(
-        mf.visible_partitions(src_dir), key=lambda r: int(r["partition_id"])
+    # visible masks and partitions from one commit state
+    mask_names, rows = dl.consistent_view(
+        src_dir, lambda: mf.visible_partitions(src_dir)
     )
+    rows = sorted(rows, key=lambda r: int(r["partition_id"]))
     if not rows:
         raise ValueError(f"nothing to recluster: {src_dir} has no partitions")
     base_meta = [r for r in rows if int(r["partition_id"]) < mf.APPEND_BAND]
@@ -144,13 +155,7 @@ def recluster_dataset(
         _coerce(hi) for r in band_meta
         for _, hi in [_minmax(r)] if hi is not None and _coerce(hi) > maxes[-1]
     })
-    # visible masks (consistent view: single read under no writer)
-    masks_by_pid: dict[int, list] = {}
-    for name in dl.visible_delete_files(src_dir):
-        for e in dl.read_delete_file(src_dir, name).get("entries", []):
-            masks_by_pid.setdefault(int(e["pid"]), []).append(
-                (e["enc"], e.get("data", ""), int(e["n_rows"]))
-            )
+    masks_by_pid = dl.load_raw(src_dir, mask_names)
 
     mf.clear_manifest(dst_dir)
     mf.write_schema(dst_dir, arrow_schema, json.dumps(spark_schema),
@@ -179,23 +184,12 @@ def recluster_dataset(
         )
 
         def scan_bands(batches):
-            from rugo_spark import deletes as _dl
-            from rugo_spark.engine import read_block_file
-
             schema = pa.ipc.read_schema(pa.py_buffer(schema_bytes))
             mx = np.array(maxes_bc.value)
             tb = np.array(tail_bc.value) if tail_bc.value else None
             for b in batches:
                 for pid, path in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
-                    tbl = pa.Table.from_batches(
-                        list(read_block_file(path, schema, None, None))
-                    )
-                    raw = masks_bc.value.get(int(pid))
-                    if raw:
-                        tbl = pa.Table.from_batches(
-                            list(_dl.apply_mask(tbl.to_batches(), _dl.union_positions(raw))),
-                            schema=tbl.schema,
-                        )
+                    tbl = _masked_table(path, schema, masks_bc.value.get(int(pid)))
                     if tbl.num_rows == 0:
                         continue
                     keys = tbl.column(sort_key).to_numpy(zero_copy_only=False)
@@ -234,8 +228,7 @@ def recluster_dataset(
         base_bc = sc.broadcast(base_map)
 
         def fold(key: tuple, tbl: pa.Table) -> pa.Table:
-            from rugo_spark import deletes as _dl
-            from rugo_spark.engine import encode_block_row, read_block_file
+            from rugo_spark.engine import encode_block_row
 
             gid = int(key[0].as_py())
             if os.path.exists(mf.sidecar_path(dst_dir, gid)):
@@ -245,16 +238,7 @@ def recluster_dataset(
             if entry is not None:
                 path, raw = entry
                 schema = pa.ipc.read_schema(pa.py_buffer(schema_bytes))
-                base_tbl = pa.Table.from_batches(
-                    list(read_block_file(path, schema, None, None))
-                )
-                if raw:
-                    base_tbl = pa.Table.from_batches(
-                        list(_dl.apply_mask(
-                            base_tbl.to_batches(), _dl.union_positions(list(raw))
-                        )),
-                        schema=base_tbl.schema,
-                    )
+                base_tbl = _masked_table(path, schema, raw)
                 # pre-evolution base blocks may store fewer columns: decode
                 # null-fills the tail, so both sides share the full schema
                 tbl = pa.concat_tables([base_tbl, tbl], promote_options="default")
@@ -296,8 +280,7 @@ def recluster_dataset(
         ).repartition(min(len(copy_specs), sc.defaultParallelism * 4))
 
         def copier(batches):
-            from rugo_spark import deletes as _dl
-            from rugo_spark.engine import encode_block_row, read_block_file
+            from rugo_spark.engine import encode_block_row
 
             schema = pa.ipc.read_schema(pa.py_buffer(schema_bytes))
             for b in batches:
@@ -308,15 +291,8 @@ def recluster_dataset(
                         continue
                     dst = mf.block_path(dst_dir, gid)
                     if spec["masked"]:
-                        tbl = pa.Table.from_batches(
-                            list(read_block_file(spec["src"], schema, None, None))
-                        )
-                        raw = masks_bc.value.get(int(spec["pid"])) or []
-                        tbl = pa.Table.from_batches(
-                            list(_dl.apply_mask(
-                                tbl.to_batches(), _dl.union_positions(raw)
-                            )),
-                            schema=tbl.schema,
+                        tbl = _masked_table(
+                            spec["src"], schema, masks_bc.value.get(int(spec["pid"]))
                         )
                         row = encode_block_row(
                             tbl, dst, gid, sort_key=sort_key,

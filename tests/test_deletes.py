@@ -277,6 +277,41 @@ def test_reader_retries_on_mid_read_lifecycle_commit(
     calls["n"] = 0
     assert metadata_agg(spark, encoded).first()["n_rows"] == want
     assert calls["n"] >= 3
+    # so does format("rugo")'s partition listing (driven in-process: Spark
+    # plans Python data sources in a separate worker)
+    calls["n"] = 0
+    assert _format_rugo_rows(spark, encoded) == want
+    assert calls["n"] >= 3
+
+
+def _format_rugo_rows(spark, out_dir) -> int:
+    from rugo_spark.datasource import RugoReader, register
+
+    register(spark)
+    reader = RugoReader({"path": out_dir},
+                        spark.read.format("rugo").load(out_dir).schema)
+    return sum(b.num_rows for p in reader.partitions() for b in reader.read(p))
+
+
+def test_reader_refuses_a_view_that_never_settles(spark, token_df, encoded, monkeypatch):
+    """A delete-file list that changes on EVERY re-read must fail the read
+    loudly, never plan from a torn view (a MERGE would show both row
+    versions, or neither)."""
+    delete_where(spark, encoded, [("n_tok", "<", 150)])
+    real = dl.visible_delete_files
+    calls = {"n": 0}
+
+    def flapping(out_dir, snapshot_id=None):
+        calls["n"] += 1
+        return real(out_dir, snapshot_id) if calls["n"] % 2 else []
+
+    monkeypatch.setattr(dl, "visible_delete_files", flapping)
+    with pytest.raises(RuntimeError, match="torn view"):
+        decode_table(spark, encoded).count()
+    with pytest.raises(RuntimeError, match="torn view"):
+        metadata_agg(spark, encoded)
+    with pytest.raises(RuntimeError, match="torn view"):
+        _format_rugo_rows(spark, encoded)
 
 
 # ------------------------------------------------------------- read paths
