@@ -8,8 +8,8 @@ regardless of shuffle arrival order), encodes every pid's run through the
 block container, writes the block file and manifest sidecar atomically, and
 returns one lineage row per block.  The map-only, sorted and append paths
 run the same writer with one split per block.  Decode is ``mapInArrow`` over
-manifest rows — one task per block file, no shuffle, streaming RecordBatches
-out.
+manifest rows packed into tasks the way Spark packs file splits
+(:func:`block_tasks`), no shuffle, streaming RecordBatches out.
 
 Everything data-sized stays in Arrow/numpy; Python touches only per-partition
 scalars (the north rule's "no per-row Python in the hot path").
@@ -24,6 +24,7 @@ import zlib
 
 import pyarrow as pa
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 
 from rugo_spark import deletes as dl
@@ -478,6 +479,85 @@ def read_block_rows(
     pos = dl.decode_positions(*entry)
     tbl = pa.Table.from_batches(list(read_block_file(path, schema, columns, None)))
     return tbl.take(pa.array(pos.astype("int64")))
+
+
+# ------------------------------------------------------- block-read tasks
+
+
+def pack_blocks(
+    sizes: list[int], max_bytes: int, open_cost: int, min_tasks: int
+) -> list[list[int]]:
+    """Spark's file-split packing (``FilePartition.getFilePartitions``) over
+    block byte sizes: largest first (ties keep input order), each block
+    charged ``open_cost``, a task closed once the next block would push it
+    past ``min(max_bytes, max(open_cost, Σ(size + open_cost) / min_tasks))``.
+    Returns the input indices of each task.  A pure function of its
+    arguments, so a re-run maps the same rows to the same task ids."""
+    total = sum(s + open_cost for s in sizes)
+    cap = min(max_bytes, max(open_cost, total // min_tasks))
+    groups: list[list[int]] = []
+    acc = 0
+    for i in sorted(range(len(sizes)), key=lambda i: -sizes[i]):
+        if not groups or acc + sizes[i] > cap:
+            groups.append([])
+            acc = 0
+        groups[-1].append(i)
+        acc += sizes[i] + open_cost
+    return groups
+
+
+def _split_confs(spark: SparkSession) -> tuple[int, int, int]:
+    """``(maxPartitionBytes, openCostInBytes, minPartitionNum)`` as Spark's
+    file scan resolves them; Spark's defaults off a classic session."""
+    try:
+        jss = spark._jsparkSession
+        conf = jss.sessionState().conf()
+        min_parts = conf.filesMinPartitionNum()
+        return (
+            int(conf.filesMaxPartitionBytes()),
+            int(conf.filesOpenCostInBytes()),
+            int(min_parts.get() if min_parts.isDefined()
+                else jss.leafNodeDefaultParallelism()),
+        )
+    except (AttributeError, Py4JError):
+        return 128 << 20, 4 << 20, spark.sparkContext.defaultParallelism
+
+
+def block_tasks(
+    spark: SparkSession,
+    rows: list[dict],
+    cols: list[str],
+    kernel,
+    schema,
+    num_tasks: int | None = None,
+) -> DataFrame:
+    """The one task source for readers that fan out over a block list:
+    ``kernel`` runs as ``mapInArrow`` and gets its task's ``rows`` as one
+    RecordBatch of the columns ``cols``.  Rows pack into tasks by
+    :func:`pack_blocks` over their ``output_bytes`` under the session's
+    ``spark.sql.files`` confs; ``num_tasks`` instead deals the size-sorted
+    rows round-robin over exactly ``min(num_tasks, rows)`` tasks.  The source
+    is ``spark.range`` with one row per task: no Exchange for AQE to split
+    into a second job.  A Python task costs ~0.25 s of slot time whatever
+    it does (4-core local[4], Spark 4.1), so fewer, fuller tasks win."""
+    sizes = [int(r.get("output_bytes") or 0) for r in rows]
+    if num_tasks is None:
+        groups = pack_blocks(sizes, *_split_confs(spark))
+    else:
+        k = max(1, min(int(num_tasks), len(sizes)))
+        order = sorted(range(len(sizes)), key=lambda i: -sizes[i])
+        groups = [order[t::k] for t in range(k)]
+    parts = [
+        pa.RecordBatch.from_pydict({c: [rows[i][c] for i in g] for c in cols})
+        for g in groups
+    ]
+
+    def run(batches):
+        for batch in batches:
+            for t in batch.column(0).to_pylist():
+                yield from kernel(iter([parts[t]]))
+
+    return spark.range(0, len(groups), 1, len(groups)).mapInArrow(run, schema)
 
 
 # ------------------------------------------------------------- encode job
@@ -1267,10 +1347,45 @@ def _predicate_positions(batches, filters, offset_base: int = 0):
     return np.empty(0, dtype=np.uint32), off - offset_base
 
 
+def _live_matches(path: str, schema: pa.Schema, columns: list[str], filters, prior):
+    """A mask scan's block read: ``columns`` of the whole block (no stripe
+    skipping: positions are block-absolute) and the positions of rows that
+    match ``filters`` and that the raw mask entries ``prior`` leave live."""
+    import numpy as np
+
+    tbl = pa.Table.from_batches(list(read_block_file(path, schema, columns, None)))
+    matched, _ = _predicate_positions(tbl.to_batches(), filters)
+    if prior and len(matched):
+        matched = np.setdiff1d(matched, dl.union_positions(prior)).astype(np.uint32)
+    return tbl, matched
+
+
 _DELETE_ENTRY_DDL = (
     "pid long, n_rows long, n_deleted long, deleted_tokens long, "
     "enc string, data string"
 )
+
+
+def _mask_candidates(
+    out_dir: str, filters: list[tuple], exclude_base: int | None
+) -> list[dict]:
+    """Visible blocks a mask scan reads: those ``filters`` do not rule out
+    (min/max/bloom) outside ``exclude_base``'s band.  A re-run UPDATE or
+    MERGE must never re-mask the replacement rows its own band holds: under
+    the same deterministic file name that would overwrite the original
+    masks and resurface the replaced rows."""
+    return [
+        r
+        for r in mf.visible_partitions(
+            out_dir, cols=["partition_id", "block_path", "n_rows", "codecs",
+                           "bloom_col", "bloom", "output_bytes"]
+        )
+        if _sidecar_keep(r, filters)
+        and not (
+            exclude_base is not None
+            and exclude_base <= int(r["partition_id"]) < exclude_base + APPEND_BAND
+        )
+    ]
 
 
 def _predicate_mask_entries(
@@ -1295,18 +1410,7 @@ def _predicate_mask_entries(
     payload_schema = mf.read_schema_payload(out_dir) or {}
     if size_col is None:
         size_col = payload_schema.get("size_col")
-    cands = [
-        r
-        for r in mf.visible_partitions(
-            out_dir, cols=["partition_id", "block_path", "n_rows", "codecs",
-                           "bloom_col", "bloom"]
-        )
-        if _sidecar_keep(r, filters)
-        and not (
-            exclude_base is not None
-            and exclude_base <= int(r["partition_id"]) < exclude_base + APPEND_BAND
-        )
-    ]
+    cands = _mask_candidates(out_dir, filters, exclude_base)
     pids = sorted(int(r["partition_id"]) for r in cands)
     if not cands:
         return [], pids
@@ -1315,17 +1419,6 @@ def _predicate_mask_entries(
     need_cols = sorted({c for c, _, _ in filters})
     tok_col = size_col if size_col in arrow_schema.names else None
     decode_cols = sorted(set(need_cols) | ({tok_col} if tok_col else set()))
-
-    import pandas as pd
-
-    src = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "pid": [int(r["partition_id"]) for r in cands],
-                "block_path": [r["block_path"] for r in cands],
-            }
-        )
-    ).repartition(min(len(cands), spark.sparkContext.defaultParallelism * 4))
 
     def masker(batches):
         import numpy as np
@@ -1336,28 +1429,21 @@ def _predicate_mask_entries(
             pids_ = batch.column(0).to_pylist()
             paths = batch.column(1).to_pylist()
             for pid, path in zip(pids_, paths):
-                # ONE read of the predicate (+size) columns; NO stripe
-                # skipping: positions are block-absolute
-                tbl = pa.Table.from_batches(
-                    list(read_block_file(path, schema, decode_cols, None))
+                # ONE read of the predicate (+size) columns
+                tbl, matched = _live_matches(
+                    path, schema, decode_cols, filters, prior_bc.value.get(int(pid))
                 )
-                matched, n_rows = _predicate_positions(tbl.to_batches(), filters)
-                prior_entries = prior_bc.value.get(int(pid))
-                if prior_entries is not None and len(matched):
-                    matched = np.setdiff1d(
-                        matched, dl.union_positions(prior_entries)
-                    ).astype(np.uint32)
                 if not len(matched):
                     continue
                 dtok = 0
                 if tok_col is not None:
                     sizes = tbl.column(tok_col).to_numpy(zero_copy_only=False)
                     dtok = int(np.nansum(sizes[matched].astype("float64")))
-                enc, data = dl.encode_positions(matched, n_rows)
+                enc, data = dl.encode_positions(matched, tbl.num_rows)
                 out.append(
                     {
                         "pid": int(pid),
-                        "n_rows": int(n_rows),
+                        "n_rows": tbl.num_rows,
                         "n_deleted": int(len(matched)),
                         "deleted_tokens": dtok,
                         "enc": enc,
@@ -1367,18 +1453,10 @@ def _predicate_mask_entries(
             if out:
                 yield pa.RecordBatch.from_pylist(out)
 
-    entries = [
-        {
-            "pid": int(r["pid"]),
-            "n_rows": int(r["n_rows"]),
-            "n_deleted": int(r["n_deleted"]),
-            "deleted_tokens": int(r["deleted_tokens"]),
-            "enc": r["enc"],
-            "data": r["data"],
-        }
-        for r in src.mapInArrow(masker, _DELETE_ENTRY_DDL).collect()
-    ]
-    return entries, pids
+    src = block_tasks(
+        spark, cands, ["partition_id", "block_path"], masker, _DELETE_ENTRY_DDL
+    )
+    return [r.asDict() for r in src.collect()], pids
 
 
 def delete_where(
@@ -1584,7 +1662,6 @@ def _matched_key_mask_entries(
     ``applyInArrow`` per pid folds them to compressed mask entries.  Only
     the kilobyte entries ever reach the driver."""
     import numpy as np
-    import pandas as pd
     import pyarrow.compute as pc
     import pyspark.sql.functions as F
     from pyspark.sql.types import StructType
@@ -1616,96 +1693,38 @@ def _matched_key_mask_entries(
     if bounds["lo"] is None:
         return []
     filters = [(ds_key, ">=", bounds["lo"]), (ds_key, "<=", bounds["hi"])]
-    cands = [
-        r
-        for r in mf.visible_partitions(
-            out_dir, cols=["partition_id", "block_path", "n_rows", "codecs",
-                           "bloom_col", "bloom"]
-        )
-        if _sidecar_keep(r, filters)
-        # a resumed/re-run merge must never target its OWN band: those are
-        # the replacement rows it appended, and re-masking them (under the
-        # same deterministic file name) would overwrite the original masks
-        # and resurface the replaced rows
-        and not (
-            exclude_base is not None
-            and exclude_base <= int(r["partition_id"]) < exclude_base + APPEND_BAND
-        )
-    ]
+    cands = _mask_candidates(out_dir, filters, exclude_base)
     if not cands:
         return []
     prior_bc = spark.sparkContext.broadcast(
         dl.load_raw(out_dir, dl.visible_delete_files(out_dir))
     )
     schema_bytes = arrow_schema.serialize().to_pybytes()
-    lo, hi = bounds["lo"], bounds["hi"]
     size_col = payload_schema.get("size_col")
     tok_col = size_col if size_col in arrow_schema.names else None
     decode_cols = sorted({ds_key} | ({tok_col} if tok_col else set()))
-    k_type = arrow_schema.field(ds_key).type
-
-    src = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "pid": [int(r["partition_id"]) for r in cands],
-                "block_path": [r["block_path"] for r in cands],
-            }
-        )
-    ).repartition(min(len(cands), spark.sparkContext.defaultParallelism * 4))
 
     def scanner(batches):
         schema = pa.ipc.read_schema(pa.py_buffer(schema_bytes))
-
-        def _flat(x, typ):
-            if isinstance(x, pa.ChunkedArray):
-                if x.num_chunks == 0:
-                    return pa.array([], type=typ)
-                x = x.combine_chunks()  # Array in pyarrow>=15, else 1-chunk
-                if isinstance(x, pa.ChunkedArray):
-                    x = x.chunk(0)
-            return x
-
         for batch in batches:
             for pid, path in zip(
                 batch.column(0).to_pylist(), batch.column(1).to_pylist()
             ):
-                # ONE key-column read, NO stripe skipping (block-absolute pos)
-                tbl = pa.Table.from_batches(
-                    list(read_block_file(path, schema, decode_cols, None))
+                # ONE key-column read; the key range is the live-row filter
+                tbl, pos = _live_matches(
+                    path, schema, decode_cols, filters, prior_bc.value.get(int(pid))
                 )
-                n_rows = tbl.num_rows
-                k = tbl.column(ds_key).combine_chunks()
-                keep = pc.fill_null(
-                    pc.and_(
-                        pc.greater_equal(k, pa.scalar(lo, type=k_type)),
-                        pc.less_equal(k, pa.scalar(hi, type=k_type)),
-                    ),
-                    False,
-                ).to_numpy(zero_copy_only=False).copy()
-                prior = prior_bc.value.get(int(pid))
-                if prior is not None:
-                    keep[dl.union_positions(prior)] = False  # already deleted
-                pos = np.nonzero(keep)[0]
                 if not len(pos):
                     continue
-                idx = pa.array(pos, type=pa.int64())
-                sz = (
-                    pc.fill_null(
-                        pc.cast(pc.take(tbl.column(tok_col), idx), pa.int64()), 0
-                    )
-                    if tok_col is not None
-                    else pa.array(np.zeros(len(pos), dtype=np.int64))
-                )
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(np.full(len(pos), int(pid), dtype=np.int64)),
-                        pa.array(np.full(len(pos), n_rows, dtype=np.int64)),
-                        idx,
-                        _flat(pc.take(k, idx), k_type),
-                        _flat(sz, pa.int64()),
-                    ],
-                    names=["pid", "n_rows", "pos", "k", "sz"],
-                )
+                hit = tbl.take(pa.array(pos.astype(np.int64)))
+                yield from pa.table({
+                    "pid": np.full(len(pos), int(pid), dtype=np.int64),
+                    "n_rows": np.full(len(pos), tbl.num_rows, dtype=np.int64),
+                    "pos": pos.astype(np.int64),
+                    "k": hit.column(ds_key),
+                    "sz": pc.fill_null(pc.cast(hit.column(tok_col), pa.int64()), 0)
+                    if tok_col is not None else np.zeros(len(pos), dtype=np.int64),
+                }).to_batches()
 
     scan_schema = StructType.fromJson(
         {
@@ -1719,7 +1738,9 @@ def _matched_key_mask_entries(
             ],
         }
     )
-    decoded = src.mapInArrow(scanner, scan_schema)
+    decoded = block_tasks(
+        spark, cands, ["partition_id", "block_path"], scanner, scan_schema
+    )
     keys = df.select(F.col(key_col).alias("k")).distinct()
     matched = decoded.join(keys, "k", "inner")
 
@@ -1745,17 +1766,8 @@ def _matched_key_mask_entries(
         )
 
     return [
-        {
-            "pid": int(r["pid"]),
-            "n_rows": int(r["n_rows"]),
-            "n_deleted": int(r["n_deleted"]),
-            "deleted_tokens": int(r["deleted_tokens"]),
-            "enc": r["enc"],
-            "data": r["data"],
-        }
-        for r in matched.groupBy("pid")
-        .applyInArrow(fold, _DELETE_ENTRY_DDL)
-        .collect()
+        r.asDict()
+        for r in matched.groupBy("pid").applyInArrow(fold, _DELETE_ENTRY_DDL).collect()
     ]
 
 
@@ -2040,11 +2052,21 @@ def merge_table(
             dl.write_delete_file(
                 out_dir, name, entries, predicate=["merge_keys", key_col]
             )
-        man = append_table(
+        append_table(
             df, out_dir, sort_key=sort_key, size_col=size_col, plans=plans,
             _ride_delete_files=[name] if name else None, _snapshot_op="merge",
+            _fingerprint=fp,
         )
-        n_appended = sum(int(r["n_rows"]) for r in man.collect())
+        # the band's rows, counted from its manifest rows on the driver
+        band = next(
+            int(m["base"]) for m in mf.append_reservations(out_dir)
+            if m.get("fingerprint") == fp
+        )
+        n_appended = sum(
+            int(r["n_rows"])
+            for r in mf.visible_partitions(out_dir, cols=["n_rows"])
+            if band <= int(r["partition_id"]) < band + APPEND_BAND
+        )
         dl.gc_orphans(out_dir)
         snap = mf.snapshot_log(out_dir, strict=False)
         return {
@@ -2856,7 +2878,8 @@ def compact_dataset(
     Streaming epochs and fine-grained encodes accumulate small blocks; at
     10⁵–10⁶ blocks the manifest read and task scheduling, not the data,
     become the decode cost.  Adjacent blocks (by partition id) are greedily
-    packed into ~``target_bytes`` groups, one task per group, ZERO shuffle.
+    packed into ~``target_bytes`` groups; the groups pack into tasks by
+    Spark's file-split rule (:func:`block_tasks`), ZERO shuffle.
 
     Two kernels (``mode``):
 
@@ -2939,12 +2962,6 @@ def compact_dataset(
         extra=mf.carry_payload(src_payload, size_col=src_payload.get("size_col")),
     )
 
-    import pandas as pd
-
-    src = spark.createDataFrame(
-        pd.DataFrame({"spec": [json.dumps(s) for s in specs]})
-    ).repartition(len(specs))
-
     def compactor(batches):
         from rugo_spark import bloom as _bloom
 
@@ -3007,7 +3024,13 @@ def compact_dataset(
                 mf.write_sidecar(dst_dir, row)
                 yield mf.manifest_batch([row])
 
-    src.mapInArrow(compactor, mf.MANIFEST_DDL).write.mode("overwrite").format("noop").save()
+    tasks = [
+        {"spec": json.dumps(s), "output_bytes": sum(int(g["output_bytes"] or 0) for g in grp)}
+        for s, grp in zip(specs, groups)
+    ]
+    block_tasks(
+        spark, tasks, ["spec"], compactor, mf.MANIFEST_DDL
+    ).write.mode("overwrite").format("noop").save()
     if consolidate:
         mf.consolidate_manifest(dst_dir)
     mf.commit_snapshot(dst_dir, "compact", extra={"src": os.path.abspath(src_dir)})
@@ -3363,8 +3386,14 @@ def decode_table(
     snapshot_id: int | None = None,
     _restrict_ranges: list | None = None,
 ) -> DataFrame:
-    """Reconstruct the original DataFrame from blocks. One task per block file,
-    no shuffle; column pruning skips undecoded columns entirely; ``filters``
+    """Reconstruct the original DataFrame from blocks, with no shuffle.
+    Blocks pack into tasks by Spark's file-split rule (:func:`block_tasks`):
+    largest first, each charged ``spark.sql.files.openCostInBytes``, a task
+    filled up to ``min(spark.sql.files.maxPartitionBytes, max(openCost,
+    Σ(bytes + openCost) / spark.sql.files.minPartitionNum))`` (that last
+    conf defaults to the session's parallelism); ``num_tasks`` instead
+    gives exactly ``min(num_tasks, blocks)`` tasks.
+    Column pruning skips undecoded columns entirely; ``filters``
     (ANDed ``(col, op, value)`` triples) skip whole blocks via manifest
     min/max stats *and* are re-applied exactly on the decoded rows.
 
@@ -3444,11 +3473,11 @@ def decode_table(
         out_schema = StructType([f for f in full.fields if f.name in want])
     else:
         out_schema = full
-    import pandas as pd
 
-    def _build_plan(requested_tasks):
+    def _build_plan():
         """Driver-side capture of the partition view (both plan paths list
-        pids inside this call).  Returns (man_df_or_None, empty_schema_df?)."""
+        pids inside this call).  Returns None (nothing visible), the
+        distributed planner's DataFrame, or the local plan's manifest rows."""
         nonlocal plan
         sidecar_names = mf.loose_sidecar_names(out_dir)
         catalog = mf.segment_catalog(out_dir)
@@ -3461,11 +3490,10 @@ def decode_table(
             # parse), so the local/distributed switch weighs them accordingly
             eff = len(sidecar_names) + n_seg_rows // 50
             plan = "distributed" if eff > _DISTRIBUTED_PLAN_THRESHOLD else "local"
-        par = spark.sparkContext.defaultParallelism
         if plan == "distributed":
             man = _plan_df_distributed(spark, out_dir, filters, keep_ranges=keep_ranges)
-            if requested_tasks:  # else decode runs on the planner's partitioning
-                man = man.repartition(max(1, min(int(requested_tasks), 4096)))
+            if num_tasks:  # else decode runs on the planner's partitioning
+                man = man.repartition(max(1, min(int(num_tasks), 4096)))
             return man
         plan_cols = ["block_path", "checksum", "output_bytes"]
         if filters:
@@ -3476,29 +3504,11 @@ def decode_table(
             for r in mf.visible_partitions(out_dir, cols=plan_cols)
             if (rs is None or int(r["partition_id"]) in rs) and _sidecar_keep(r, filters)
         ]
-        if not completed:
-            return None
-        pdf = pd.DataFrame(
-            {
-                "block_path": [r["block_path"] for r in completed],
-                "checksum": [int(r["checksum"]) for r in completed],
-            }
-        )
-        if requested_tasks is None:
-            # one task per block is right for few big blocks, pathological
-            # for many small ones (task overhead ~10-20 ms): target ≥4 waves
-            # per core OR ~32 MB per task, whichever gives more tasks
-            total_bytes = sum(int(r.get("output_bytes") or 0) for r in completed)
-            requested_tasks = min(
-                len(completed), max(par * 4, total_bytes // (32 << 20))
-            )
-        return spark.createDataFrame(pdf).repartition(
-            max(1, min(int(requested_tasks), 4096))
-        )
+        return completed or None
 
     # both plan paths capture the pid universe driver-side inside
     # _build_plan, so the mask list and the plan come from one commit state
-    names, man = dl.consistent_view(out_dir, lambda: _build_plan(num_tasks), snapshot_id)
+    names, man = dl.consistent_view(out_dir, _build_plan, snapshot_id)
     if man is None:
         return _to_logical(spark.createDataFrame([], out_schema))
     masks_raw = dl.load_raw(out_dir, names)
@@ -3528,7 +3538,12 @@ def decode_table(
                     continue
                 yield from out_batches
 
-    out = man.mapInArrow(decoder, out_schema)
+    if isinstance(man, DataFrame):
+        out = man.mapInArrow(decoder, out_schema)
+    else:
+        out = block_tasks(
+            spark, man, ["block_path", "checksum"], decoder, out_schema, num_tasks
+        )
     if filters:
         import pyspark.sql.functions as F
 
@@ -3713,28 +3728,15 @@ def read_changes(
     if diff:
         rows_by_pid = mf.load_rows(out_dir, sorted(diff))
         schema_bytes = arrow_schema.serialize().to_pybytes()
-        import pandas as pd
 
         # positions ride COMPRESSED (pos32/bitmap/all, zstd'd) — a mass
         # retention delete of 1M-row blocks would otherwise put ~4 MB of
         # raw uint32 per block on the driver and in every task payload
-        enc_specs = [
-            (rows_by_pid[p]["block_path"],
-             *dl.encode_positions(diff[p], int(rows_by_pid[p]["n_rows"])),
-             int(rows_by_pid[p]["n_rows"]))
-            for p in sorted(diff)
-        ]
-        spec_pdf = pd.DataFrame(
-            {
-                "block_path": [s[0] for s in enc_specs],
-                "enc": [s[1] for s in enc_specs],
-                "data": [s[2] for s in enc_specs],
-                "n_rows": [s[3] for s in enc_specs],
-            }
-        )
-        src = spark.createDataFrame(spec_pdf).repartition(
-            min(len(spec_pdf), spark.sparkContext.defaultParallelism * 4)
-        )
+        specs = []
+        for p in sorted(diff):
+            r = dict(rows_by_pid[p])
+            r["enc"], r["data"] = dl.encode_positions(diff[p], int(r["n_rows"]))
+            specs.append(r)
 
         def deleted_rows(batches):
             schema = pa.ipc.read_schema(pa.py_buffer(schema_bytes))
@@ -3753,7 +3755,10 @@ def read_changes(
                     )
                     yield from taken.to_batches()
 
-        parts.append(src.mapInArrow(deleted_rows, out_schema))
+        parts.append(block_tasks(
+            spark, specs, ["block_path", "enc", "data", "n_rows"],
+            deleted_rows, out_schema,
+        ))
 
     if not parts:
         return spark.createDataFrame([], out_schema)

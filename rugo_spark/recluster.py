@@ -74,10 +74,10 @@ def recluster_dataset(
     Returns ``{"copied", "rewritten", "tail_blocks", "rewritten_rows",
     "n_blocks"}``."""
     import numpy as np
-    import pandas as pd
     import pyarrow as pa
 
     from rugo_spark import deletes as dl
+    from rugo_spark.engine import block_tasks
 
     if os.path.realpath(src_dir) == os.path.realpath(dst_dir):
         raise ValueError("recluster_dataset: dst_dir must differ from src_dir")
@@ -175,14 +175,6 @@ def recluster_dataset(
     rewritten_rows = 0
     gids_with_rows: set[int] = set()
     if band_meta:
-        src_pdf = pd.DataFrame({
-            "pid": [int(r["partition_id"]) for r in band_meta],
-            "path": [r["block_path"] for r in band_meta],
-        })
-        bands_src = spark.createDataFrame(src_pdf).repartition(
-            min(len(src_pdf), sc.defaultParallelism * 4)
-        )
-
         def scan_bands(batches):
             schema = pa.ipc.read_schema(pa.py_buffer(schema_bytes))
             mx = np.array(maxes_bc.value)
@@ -216,7 +208,9 @@ def recluster_dataset(
             list(StructType.fromJson(spark_schema).fields)
             + [StructField("__rugo_gid", LongType(), False)]
         )
-        bands_df = bands_src.mapInArrow(scan_bands, scan_schema)
+        bands_df = block_tasks(
+            spark, band_meta, ["partition_id", "block_path"], scan_bands, scan_schema
+        )
 
         base_map = {
             i: (
@@ -275,10 +269,6 @@ def recluster_dataset(
         })
     n_copied = n_purged = 0
     if copy_specs:
-        cp_src = spark.createDataFrame(
-            pd.DataFrame({"spec": [json.dumps(s) for s in copy_specs]})
-        ).repartition(min(len(copy_specs), sc.defaultParallelism * 4))
-
         def copier(batches):
             from rugo_spark.engine import encode_block_row
 
@@ -315,7 +305,12 @@ def recluster_dataset(
 
         kinds = [
             r["kind"]
-            for r in cp_src.mapInArrow(copier, "kind string").collect()
+            for r in block_tasks(
+                spark,
+                [{"spec": json.dumps(s), "output_bytes": s["row"].get("output_bytes")}
+                 for s in copy_specs],
+                ["spec"], copier, "kind string",
+            ).collect()
         ]
         n_copied = kinds.count("copied")
         n_purged = kinds.count("purged")

@@ -45,11 +45,45 @@ def test_decode_is_shuffle_free(spark, tmp_out):
     pdf = pd.DataFrame({"k": [f"k{i}" for i in range(500)], "v": list(range(500))})
     encode_table(spark.createDataFrame(pdf), tmp_out, key_col="k", num_partitions=4)
     plan = _plan(decode_table(spark, tmp_out))
-    # one repartition of PATHS (tiny strings) feeds the decoder; the decoded
-    # DATA never shuffles — no Exchange above the MapInArrow decoder
+    # a spark.range of task ids feeds the decoder (each task's block rows
+    # ride the kernel): neither the block list nor the decoded data shuffles
     assert plan.count("MapInArrow") == 1
-    decoder_part = plan.split("MapInArrow")[0]
-    assert "Exchange" not in decoder_part
+    assert "Exchange" not in plan, plan
+    assert "Range (0, " in plan, plan
+
+
+def _jobs_run(spark, action):
+    """``(Spark jobs action() ran, its result)``, counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"rugo-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        result = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), result
+
+
+def test_block_kernels_run_one_job_each(spark, tmp_out):
+    """Each block kernel is one job: no Exchange under it for AQE to split
+    into a second job.  A point lookup and a DELETE run one kernel; an
+    UPDATE runs two (the mask scan and the decode its append encodes)."""
+    from rugo_spark.engine import decode_table, delete_where, encode_table, update_where
+    from rugo_spark.tokengen import token_batch
+
+    df = spark.createDataFrame(token_batch(1500).to_pandas())
+    encode_table(df, tmp_out, key_col="doc_id", size_col="n_tok", num_partitions=9)
+    key = df.first()["doc_id"]
+    n, rows = _jobs_run(spark, lambda: decode_table(
+        spark, tmp_out, filters=[("doc_id", "=", key)]).collect())
+    assert n == 1 and [r["doc_id"] for r in rows] == [key]
+    n, res = _jobs_run(spark, lambda: delete_where(spark, tmp_out, [("n_tok", "<", 300)]))
+    assert n == 1 and res["n_deleted"] == df.filter("n_tok < 300").count() > 0
+    n, res = _jobs_run(spark, lambda: update_where(
+        spark, tmp_out, [("n_tok", ">=", 600)], {"source": "'u'"}))
+    assert n == 2 and res["n_updated"] == df.filter("n_tok >= 600").count() > 0
 
 
 def test_grouped_encode_single_data_shuffle(spark):

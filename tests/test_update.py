@@ -126,6 +126,62 @@ def test_update_crash_before_flip(spark, token_df, encoded, monkeypatch):
     assert decode_table(spark, encoded).count() == N_DOCS
 
 
+def test_update_rerun_after_crash_adopts_its_band(
+    spark, token_df, encoded, tmp_path, monkeypatch
+):
+    """A crashed update re-run over the same state adopts its own band: the
+    decode feeding the band packs the same rows into the same task ids
+    (block pid = band base + task id), so the re-run rewrites only the
+    missing blocks, byte-identical to an update that never crashed."""
+    import os
+
+    import pyspark.sql.functions as F
+
+    from rugo_spark import engine as eng
+
+    pred, assign = [("n_tok", ">=", 0)], {"source": "'v2'"}
+    clean = str(tmp_path / "clean")
+    encode_table(token_df, clean, key_col="doc_id", size_col="n_tok",
+                 num_partitions=5)
+    update_where(spark, clean, pred, assign)
+
+    real = eng._atomic_write
+
+    def dying(path, payload):
+        if path.endswith(".json") and b'"complete": true' in payload:
+            raise RuntimeError("simulated crash before completion flip")
+        return real(path, payload)
+
+    monkeypatch.setattr(eng, "_atomic_write", dying)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        update_where(spark, encoded, pred, assign)
+    monkeypatch.setattr(eng, "_atomic_write", real)
+    (marker,) = mf.append_reservations(encoded)
+    base = int(marker["base"])
+    band = [int(r["partition_id"]) for r in mf.completed_partitions(encoded)
+            if int(r["partition_id"]) >= base]
+    assert len(band) >= 2
+    os.remove(mf.sidecar_path(encoded, band[-1]))  # a partial band
+    os.remove(mf.block_path(encoded, band[-1]))
+
+    res = update_where(spark, encoded, pred, assign)
+    assert res["n_updated"] == N_DOCS
+    (marker,) = mf.append_reservations(encoded)
+    assert marker["complete"] and int(marker["base"]) == base  # adopted
+
+    def band_blocks(d):
+        lo = int(mf.append_reservations(d)[0]["base"])
+        return [(int(r["partition_id"]) - lo, int(r["checksum"]))
+                for r in mf.visible_partitions(d) if int(r["partition_id"]) >= lo]
+
+    assert band_blocks(encoded) == band_blocks(clean)
+    cols = ["doc_id", "source", "n_tok"]
+    got = decode_table(spark, encoded).select(cols).orderBy("doc_id").collect()
+    want = decode_table(spark, clean).select(cols).orderBy("doc_id").collect()
+    assert got == want
+    assert decode_table(spark, encoded).filter(F.col("source") != "v2").count() == 0
+
+
 def test_update_resume_refuses_after_state_change(
     spark, token_df, encoded, monkeypatch
 ):
