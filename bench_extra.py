@@ -5,8 +5,10 @@ measurement, so per-stage isolation probes live here — guide §1.4).
 Usage: python bench_extra.py <probe> [...]
 
 Probes:
-  dedup_stages    stage-by-stage noop-sink timings of minhash_lsh_candidates
-                  and dedup_clusters over the cached 600k-doc bench corpus
+  dedup_stages    stage-by-stage noop-sink timings of the production dedup
+                  stages (shingles, minhash bands, bucket pair kernel, full
+                  LSH, components, clusters, two-stage verify) over the
+                  cached 600k-doc bench corpus
   consolidate     cProfile of manifest.consolidate_manifest at 100k sidecars
   dml             sub-step timings of update_where / merge_table at bench scale
 
@@ -55,7 +57,6 @@ def _timed(name, fn, n=2):
 
 def dedup_stages():
     import pyspark.sql.functions as F
-    from pyspark.sql.window import Window
 
     from rugo_spark.ops import dedup as dd
 
@@ -70,32 +71,13 @@ def dedup_stages():
     spark.sparkContext.setJobDescription("dedup probe: shingles")
     _timed("shingles", lambda: _noop(sh))
 
-    sig = sh.filter(F.size("_sh") > 0).select(
-        F.col("doc_id"), dd.minhash_signature(F.col("_sh"), n_hashes).alias("sig")
-    )
-    spark.sparkContext.setJobDescription("dedup probe: signature")
-    _timed("signature", lambda: _noop(sig))
+    bands = dd._minhash_bands(docs, "text", "doc_id", shingle, n_hashes, n_bands, unit)
+    spark.sparkContext.setJobDescription("dedup probe: minhash bands")
+    _timed("minhash_bands", lambda: _noop(bands))
 
-    rows_per_band = n_hashes // n_bands
-    bands = sig.select(
-        "doc_id", "sig",
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(*[F.element_at("sig", b * rows_per_band + r + 1)
-                             for r in range(rows_per_band)]).alias("band_key"),
-            ) for b in range(n_bands)
-        ])).alias("bk"),
-    ).select("doc_id", "sig", "bk.band", "bk.band_key")
-    spark.sparkContext.setJobDescription("dedup probe: bands exploded")
-    _timed("bands_explode", lambda: _noop(bands))
-
-    wb = Window.partitionBy("band", "band_key")
-    banded = bands.withColumn("_rn", F.row_number().over(wb.orderBy("doc_id"))).withColumn(
-        "_cnt", F.count(F.lit(1)).over(wb)
-    )
-    spark.sparkContext.setJobDescription("dedup probe: bands + window")
-    _timed("bands_window", lambda: _noop(banded))
+    pairs_raw = dd._bucket_pairs_kernel(bands, "doc_id", n_hashes, 64)
+    spark.sparkContext.setJobDescription("dedup probe: bucket pair kernel")
+    _timed("pair_kernel", lambda: _noop(pairs_raw))
 
     spark.sparkContext.setJobDescription("dedup probe: full LSH count")
     _timed("lsh_full", lambda: dd.minhash_lsh_candidates(

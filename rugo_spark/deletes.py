@@ -302,8 +302,7 @@ def consolidate_delete_files(out_dir: str) -> dict:
 
     from rugo_spark import manifest as mf
 
-    lock = mf._acquire_consolidate_lock(out_dir)
-    try:
+    with mf.writer_lock(out_dir):
         names = visible_delete_files(out_dir)
         if len(names) < 2:
             return {"files_before": len(names), "files_after": len(names),
@@ -365,8 +364,3 @@ def consolidate_delete_files(out_dir: str) -> dict:
             "n_deleted": int(sum(e["n_deleted"] for e in entries)),
             "snapshot_id": int(entry["id"]) if entry else None,
         }
-    finally:
-        try:
-            os.remove(lock)
-        except OSError:
-            pass

@@ -1505,8 +1505,7 @@ def delete_where(
         [c, op, v if isinstance(v, (int, float, str, bool, type(None))) else str(v)]
         for c, op, v in filters
     ]
-    lock = mf._acquire_consolidate_lock(out_dir)
-    try:
+    with mf.writer_lock(out_dir):
         import hashlib
 
         prior_files = dl.visible_delete_files(out_dir)
@@ -1540,11 +1539,6 @@ def delete_where(
             "delete_file": name,
             "snapshot": snap["id"] if snap else None,
         }
-    finally:
-        try:
-            os.remove(lock)
-        except OSError:
-            pass
 
 
 def set_constraint(out_dir: str, name: str, expr: str) -> dict:
@@ -1810,8 +1804,7 @@ def delete_keys(
     if key_col not in arrow_schema.names:
         raise ValueError(f"unknown delete key {key_col!r} for {out_dir}")
     src = keys_df.select(F.col(keys_df.columns[0]).alias(key_col)).distinct()
-    lock = mf._acquire_consolidate_lock(out_dir)
-    try:
+    with mf.writer_lock(out_dir):
         entries = _matched_key_mask_entries(spark, out_dir, src, key_col)
         summary = {"n_deleted": 0, "n_blocks": 0, "delete_file": None,
                    "snapshot": None}
@@ -1841,11 +1834,6 @@ def delete_keys(
             "delete_file": name,
             "snapshot": snap["id"] if snap else None,
         }
-    finally:
-        try:
-            os.remove(lock)
-        except OSError:
-            pass
 
 
 def update_where(
@@ -1909,8 +1897,7 @@ def update_where(
             "(use append_table(..., allow_new_columns=True) to evolve)"
         )
     size_col = payload_schema.get("size_col")
-    lock = mf._acquire_consolidate_lock(out_dir)
-    try:
+    with mf.writer_lock(out_dir):
         # matched rows, transformed — the append side.  Decoded under the
         # lock so the source snapshot matches the masks computed below.
         src = decode_table(spark, out_dir, filters=filters)
@@ -1979,11 +1966,6 @@ def update_where(
             "delete_file": name,
             "snapshot": int(snap[-1]["id"]) if snap else None,
         }
-    finally:
-        try:
-            os.remove(lock)
-        except OSError:
-            pass
 
 
 def merge_table(
@@ -2033,8 +2015,7 @@ def merge_table(
         # or metadata_agg drifts from a scan after every merge
         size_col = (mf.read_schema_payload(out_dir) or {}).get("size_col")
     fp = _input_fingerprint(df)
-    lock = mf._acquire_consolidate_lock(out_dir)
-    try:
+    with mf.writer_lock(out_dir):
         own_base = next(
             (
                 int(m["base"])
@@ -2075,11 +2056,6 @@ def merge_table(
             "delete_file": name,
             "snapshot": int(snap[-1]["id"]) if snap else None,
         }
-    finally:
-        try:
-            os.remove(lock)
-        except OSError:
-            pass
 
 
 def encode_table(

@@ -12,6 +12,7 @@ rugo-``read_metadata``-shaped nested dict for functional parity.
 from __future__ import annotations
 
 import base64
+import contextlib
 import json
 import os
 
@@ -431,17 +432,16 @@ def consolidate_manifest(out_dir: str, min_sidecars: int = 1) -> dict:
             "it before consolidating — folding condemned sidecars would "
             "resurrect partitions the rollback is deleting"
         )
-    lock = _acquire_consolidate_lock(out_dir)
-    try:
+    with writer_lock(out_dir):
         return _consolidate_locked(out_dir, min_sidecars)
-    finally:
-        try:
-            os.remove(lock)
-        except OSError:
-            pass
 
 
-def _acquire_consolidate_lock(out_dir: str) -> str:
+@contextlib.contextmanager
+def writer_lock(out_dir: str):
+    """Hold the dataset's single-writer lock (``CONSOLIDATE_LOCK``, an
+    ``O_EXCL`` file) for the ``with`` body; it is removed on exit, also on
+    error.  A lock left by a crashed writer on this host (pid no longer
+    alive) is broken once; any other held lock raises ``ValueError``."""
     import socket
 
     os.makedirs(out_dir, exist_ok=True)
@@ -452,7 +452,7 @@ def _acquire_consolidate_lock(out_dir: str) -> str:
             fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
             os.write(fd, json.dumps(me).encode())
             os.close(fd)
-            return path
+            break
         except FileExistsError:
             try:
                 with open(path) as f:
@@ -478,7 +478,13 @@ def _acquire_consolidate_lock(out_dir: str) -> str:
                 f"{held.get('host')!r}); wait for it, or remove the lock file "
                 "only after confirming that session is dead"
             )
-    raise AssertionError("unreachable")
+    try:
+        yield
+    finally:
+        try:
+            os.remove(path)
+        except OSError:
+            pass
 
 
 def _consolidate_locked(out_dir: str, min_sidecars: int) -> dict:
@@ -1207,8 +1213,7 @@ def expire_snapshots(
             f"{out_dir} has an in-progress rollback; resume it before "
             "expiring snapshots (the log is being rewritten)"
         )
-    lock = _acquire_consolidate_lock(out_dir)
-    try:
+    with writer_lock(out_dir):
         log = snapshot_log(out_dir, strict=True)
         tagged = set(tags(out_dir).values())  # tagged snapshots never expire
         if older_than_s is None:
@@ -1234,11 +1239,6 @@ def expire_snapshots(
             "kept": [int(e["id"]) for e in kept],
             "delete_files_removed": dl.gc_orphans(out_dir),
         }
-    finally:
-        try:
-            os.remove(lock)
-        except OSError:
-            pass
 
 
 def rollback_to_snapshot(out_dir: str, snapshot_id: int) -> dict:
@@ -1275,8 +1275,7 @@ def rollback_to_snapshot(out_dir: str, snapshot_id: int) -> dict:
             f"({mask}); resume THAT rollback (call rollback_to_snapshot with "
             "its snapshot id) before starting another"
         )
-    lock = _acquire_consolidate_lock(out_dir)
-    try:
+    with writer_lock(out_dir):
         keep_set = RangeSet(keep)
         if mask is None:
             # anything to drop?  (read the pre-mask state directly)
@@ -1397,8 +1396,3 @@ def rollback_to_snapshot(out_dir: str, snapshot_id: int) -> dict:
         result["delete_files_removed"] = dl.gc_orphans(out_dir)
         os.remove(marker_path)  # LAST: crash above stays masked + resumable
         return result
-    finally:
-        try:
-            os.remove(lock)
-        except OSError:
-            pass

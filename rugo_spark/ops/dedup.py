@@ -1,10 +1,13 @@
 """Deduplication operators: exact, MinHash+LSH, SimHash, n-gram Jaccard.
 
-Exact + MinHash/LSH + Jaccard run entirely on Spark built-ins (codegen'd,
-shuffle only on group/band keys — scalable to 10^12 docs: the band-bucket
-join is the standard shingle→minhash→band→bucket-join plan).  SimHash uses
-one Arrow-vectorized UDF for the ±1 bit accumulation (a numpy kernel, not
-expressible efficiently in SQL).
+The plans are the standard shingle→minhash→band→bucket-join shape with
+shuffles only on group/band keys.  Exact dedup, the Jaccard joins and the
+large-graph components loop are Spark built-ins.  Per-document numeric work
+runs in Arrow-vectorized numpy kernels (``mapInArrow``): one shingle layout
++ xxHash64 minhash/band kernel for both the char and the word unit, the
+bucket pair emission, small-graph union-find and SimHash's ±1 bit votes.
+The minhash kernel replaced per-element higher-order SQL expressions that
+measured ~30× the raw hash cost (see ``_minhash_bands``).
 """
 
 from __future__ import annotations
@@ -21,143 +24,127 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
-def char_shingles(text_col: str, n: int = 5):
-    """Array of character n-grams (distinct), pure built-ins.
+def _shingle_input(df: DataFrame, text_col: str, id_col: str, unit: str) -> DataFrame:
+    """(id, _x) projection the shingle kernels read: the one place the
+    shingle ``unit`` is interpreted.  'word' splits in Spark (``split(text,
+    '\\s+')``, Java regex semantics, so corner cases such as leading empties
+    and \\x0B cannot drift); 'char' passes the text through.  The kernels
+    tell the units apart by the Arrow type: list<string> words or string
+    text (see ``_shingle_slices``)."""
+    if unit == "word":
+        x = F.split(F.col(text_col), r"\s+")
+    elif unit == "char":
+        x = F.col(text_col)
+    else:
+        raise ValueError(f"shingle unit must be 'char' or 'word', got {unit!r}")
+    return df.select(F.col(id_col), x.alias("_x"))
 
-    A text of length L yields L-n+1 shingles; texts shorter than n yield an
-    empty array (the explicit length guard matters: Spark's ``sequence(1, 0)``
-    is the *descending* [1, 0], not empty)."""
-    return F.array_distinct(
-        F.expr(
-            f"if(length({text_col}) < {n}, array(),"
-            f" transform(sequence(1, length({text_col}) - {n - 1}),"
-            f" i -> substr({text_col}, i, {n})))"
-        )
-    )
 
-
-def word_shingles(words_col: str, n: int = 3):
-    """Array of distinct word n-grams over a pre-split ``array<string>``
-    column; fewer than ``n`` words yields an empty array.
-
-    The scale path for long documents: a 300-char text has ~296 char-5
-    shingles but only ~45 word-3 shingles, cutting the per-doc hash count
-    ~6× while keeping near-dup recall (word shingling is the standard
-    web-crawl dedup unit).  Takes a COLUMN NAME of an already-split array so
-    the split sits behind its own projection boundary — inlining
-    ``split(text)`` here would be re-evaluated per hash function exactly
-    like the char_shingles CSE trap documented below.
-    """
-    return F.array_distinct(
-        F.expr(
-            f"if(size({words_col}) < {n}, array(),"
-            f" transform(sequence(1, size({words_col}) - {n - 1}),"
-            f" i -> array_join(slice({words_col}, i, {n}), ' ')))"
-        )
-    )
+# Arrow string arrays (and Spark's reader of them) address bytes with int32
+# offsets: one gathered batch of shingle strings must stay below this
+_MAX_STRING_BYTES = (1 << 31) - 1
 
 
 def _shingled(df: DataFrame, text_col: str, id_col: str, shingle: int, unit: str) -> DataFrame:
-    """(id, _sh) projection: distinct shingles of ``unit`` ('char'|'word').
+    """(id, _sh) projection: the doc's distinct n-grams of ``unit``
+    ('char'|'word') in first-occurrence order.
 
-    Both units materialize behind a projection boundary before any hashing
-    (see the CSE note in minhash_lsh_candidates).  The word unit builds the
-    raw n-gram array in an Arrow kernel (r6: the ``transform`` +
-    ``array_join`` HOF construction was ~12 s per pass over 600k docs; the
-    kernel is one ragged byte copy) and applies ``array_distinct`` JVM-side
-    — same positional first-occurrence order, so the resulting array is
-    bit-identical to the former ``word_shingles`` expression whenever the
-    doc has any shingle (shingle-less docs yield [] rather than the SQL
-    form's occasional NULL; every consumer treats both as "no shingles").
+    The kernel materializes the raw n-grams with one ragged byte gather of
+    the ``_shingle_slices`` layout (r6: the word unit's former
+    ``transform`` + ``array_join`` HOF construction was ~12 s per pass over
+    600k docs); ``array_distinct`` stays JVM-side.  That is the same positional
+    first-occurrence order as the former SQL builders, so the arrays are
+    bit-identical to theirs whenever the doc has any shingle (shingle-less
+    and null docs yield [] where the SQL form gave [] or NULL; every
+    consumer treats both as "no shingles").  A batch whose shingle bytes
+    would overflow int32 offsets (a ~43 KB mean char-5 doc at 10k rows per
+    batch) is halved until each half fits.
     """
-    if unit == "char":
-        return df.select(F.col(id_col), char_shingles(text_col, shingle).alias("_sh"))
-    if unit == "word":
-        raw = _word_shingles_arrow(df, text_col, id_col, shingle)
-        return raw.select(F.col(id_col), F.array_distinct("_sh").alias("_sh"))
-    raise ValueError(f"shingle unit must be 'char' or 'word', got {unit!r}")
-
-
-def _word_shingles_arrow(
-    df: DataFrame, text_col: str, id_col: str, shingle: int
-) -> DataFrame:
-    """(id, _sh) with _sh = the doc's word n-grams IN ORDER (duplicates
-    kept), built by the shared sentence-slice kernel: shingle strings are
-    materialized once with a single ragged byte gather instead of per-gram
-    ``array_join(slice(...))`` interpretation."""
     import numpy as np
     import pyarrow as pa
 
-    words = df.select(F.col(id_col), F.split(F.col(text_col), r"\s+").alias("_w"))
+    src = _shingle_input(df, text_col, id_col, unit)
+
+    def gather(batch):
+        n_sh, buf, sh_start, sh_len = _shingle_slices(batch.column(1), shingle)
+        total = int(sh_len.sum())
+        if total > _MAX_STRING_BYTES and batch.num_rows > 1:
+            half = batch.num_rows // 2
+            yield from gather(batch.slice(0, half))
+            yield from gather(batch.slice(half))
+            return
+        dst_rel = np.zeros(len(sh_len) + 1, dtype=np.int64)
+        np.cumsum(sh_len, out=dst_rel[1:])
+        data = np.empty(total, dtype=np.uint8)
+        if total:
+            src_idx = np.repeat(sh_start - dst_rel[:-1], sh_len) + np.arange(
+                total, dtype=np.int64
+            )
+            data = buf[src_idx]
+        values = pa.StringArray.from_buffers(
+            len(sh_len),
+            pa.py_buffer(dst_rel.astype(np.int32).tobytes()),
+            pa.py_buffer(data.tobytes()),
+        )
+        doc_offs = np.zeros(len(n_sh) + 1, dtype=np.int32)
+        np.cumsum(n_sh, out=doc_offs[1:])
+        sh_col = pa.ListArray.from_arrays(pa.array(doc_offs), values)
+        yield pa.RecordBatch.from_arrays([batch.column(0), sh_col], names=[id_col, "_sh"])
 
     def kernel(batches):
         for batch in batches:
-            ids = batch.column(0)
-            m, n_sh, buf, sh_start, sh_len = _shingle_slices(batch.column(1), shingle)
-            total = int(sh_len.sum())
-            dst_rel = np.zeros(len(sh_len) + 1, dtype=np.int64)
-            np.cumsum(sh_len, out=dst_rel[1:])
-            data = np.empty(total, dtype=np.uint8)
-            if total:
-                src_idx = np.repeat(sh_start - dst_rel[:-1], sh_len) + np.arange(
-                    total, dtype=np.int64
-                )
-                data = buf[src_idx]
-            values = pa.StringArray.from_buffers(
-                len(sh_len),
-                pa.py_buffer(dst_rel.astype(np.int32).tobytes()),
-                pa.py_buffer(data.tobytes()),
-            )
-            doc_offs = np.zeros(len(m) + 1, dtype=np.int32)
-            np.cumsum(n_sh, out=doc_offs[1:])
-            sh_col = pa.ListArray.from_arrays(pa.array(doc_offs), values)
-            yield pa.RecordBatch.from_arrays([ids, sh_col], names=[id_col, "_sh"])
+            yield from gather(batch)
 
     id_type = dict(df.dtypes)[id_col]
-    return words.mapInArrow(kernel, f"{id_col} {id_type}, _sh array<string>")
+    raw = src.mapInArrow(kernel, f"{id_col} {id_type}, _sh array<string>")
+    return raw.select(F.col(id_col), F.array_distinct("_sh").alias("_sh"))
 
 
-def minhash_signature(shingles_col, n_hashes: int = 32):
-    """Array of ``n_hashes`` min-hashes: min over shingles of xxhash64(s, seed).
+def _shingle_slices(x, shingle: int):
+    """Shared layout kernel for both shingle units: the (start, len) byte
+    slice of every n-gram in one shared buffer, flat and doc-ordered.
+    Returns ``(n_sh, buf, sh_start, sh_len)``: shingle count per doc (null
+    → 0), the uint8 buffer, and the slices.  No shingle string is
+    materialized, because every n-gram is a contiguous slice:
 
-    xxhash64 is Spark's built-in 64-bit hash (JVM-side); one seed per hash
-    function.  Returns array<long> of length n_hashes.
-
-    The per-seed lambda MUST be built by a single-parameter factory: a
-    ``lambda s, j=j`` two-parameter lambda is interpreted by PySpark as the
-    (element, index) form, silently replacing the seed with the element's
-    array index — every signature slot collapses to the same hash function.
+    * list<string> words (unit 'word'): ``buf`` is each doc's words joined
+      by one space, and a word n-gram joined by ' ' is a slice of it;
+    * string text (unit 'char'): ``buf`` is the docs' UTF-8 bytes, and a
+      char n-gram runs from one code-point start to the n-th next.  Code
+      points start at the bytes with ``b & 0xC0 != 0x80`` — the unit
+      Spark's ``length``/``substr`` count in, so the n-grams equal the
+      former ``substr(text, i, n)`` ones on emoji and CJK too.
     """
-
-    def _hash_with_seed(j: int):
-        return lambda s: F.xxhash64(s, F.lit(j))
-
-    return F.array(
-        *[F.array_min(F.transform(shingles_col, _hash_with_seed(j))) for j in range(n_hashes)]
-    )
-
-
-def _shingle_slices(w, shingle: int):
-    """Shared layout kernel for the word-unit Arrow paths: from a list<string>
-    words column, build the per-doc single-space-joined sentence buffer and
-    the (start, len) slice of every word n-gram in it.  Returns
-    ``(m, n_sh, buf, sh_start, sh_len)`` — word counts and shingle counts
-    per doc (null list → 0), the uint8 sentence buffer, and flat
-    doc-ordered shingle slices.  No shingle string is materialized: an
-    n-gram joined by ' ' IS a contiguous slice of the sentence."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    if isinstance(w, pa.ChunkedArray):
-        w = w.combine_chunks()
+    if isinstance(x, pa.ChunkedArray):
+        x = x.combine_chunks()
+    if not pa.types.is_list(x.type):
+        lens, buf = _string_parts(pc.fill_null(x, ""))
+        is_cp = (buf & 0xC0) != 0x80
+        # cps[b] = code points starting before byte b; docs are contiguous
+        cps = np.zeros(len(buf) + 1, dtype=np.int64)
+        np.cumsum(is_cp, out=cps[1:])
+        ends = np.cumsum(lens)
+        first = cps[ends - lens]
+        n_sh = np.maximum(cps[ends] - first - shingle + 1, 0)
+        # bounds[c] = byte offset of code point c; the appended buffer end
+        # (like the next doc's first code point) closes a doc's last n-gram
+        bounds = np.append(np.flatnonzero(is_cp), len(buf))
+        sh_first = np.zeros(len(n_sh), dtype=np.int64)
+        np.cumsum(n_sh[:-1], out=sh_first[1:])
+        c = np.repeat(first - sh_first, n_sh) + np.arange(int(n_sh.sum()))
+        sh_start = bounds[c]
+        return n_sh, buf, sh_start, bounds[c + shingle] - sh_start
     m = (
-        pc.fill_null(pc.list_value_length(w), 0)
+        pc.fill_null(pc.list_value_length(x), 0)
         .to_numpy(zero_copy_only=False)
         .astype(np.int64)
     )
     n_sh = np.maximum(m - shingle + 1, 0)
-    flat = pc.list_flatten(w)
+    flat = pc.list_flatten(x)
     if isinstance(flat, pa.ChunkedArray):
         flat = flat.combine_chunks()
     wl, wdata = _string_parts(flat)
@@ -188,37 +175,39 @@ def _shingle_slices(w, shingle: int):
     jw = np.arange(W, dtype=np.int64) - first_w[doc_rep]
     sh_start = word_dst[jw < n_sh[doc_rep]]
     sh_end = (word_dst + wl)[jw >= shingle - 1]
-    return m, n_sh, buf, sh_start, sh_end - sh_start
+    return n_sh, buf, sh_start, sh_end - sh_start
 
 
-def _word_minhash_bands(
+def _minhash_bands(
     df: DataFrame, text_col: str, id_col: str, shingle: int,
-    n_hashes: int, n_bands: int,
+    n_hashes: int, n_bands: int, unit: str,
 ) -> DataFrame:
-    """(id, sig, band, band_key) rows for the word-shingle unit via ONE
-    vectorized Arrow kernel — bit-identical to the SQL formulation it
-    replaces (pinned by tests/test_xxh_vec.py and the driver oracle).
+    """(id, sig, band, band_key) rows via ONE vectorized Arrow kernel —
+    bit-identical to the SQL formulation it replaces (``array_min(transform(
+    _sh, s -> xxhash64(s, j)))`` per hash, then ``xxhash64`` over each
+    band's slots; pinned by tests/test_xxh_vec.py and the driver oracle).
+    Docs without a shingle get no rows: an empty shingle set has no min, so
+    the SQL form's all-null signature would put every short doc in ONE
+    band bucket and unrelated two-char docs would "cluster" (the sequential
+    oracle, oracle_recompute.minhash_pairs, skips them for the same reason).
 
-    Motivation (r6, guide §4.2): the 16 ``array_min(transform(_sh, s ->
-    xxhash64(s, j)))`` HOF expressions ran 18.4 s over 600k docs and the
-    shingle-string construction another 8 s — interpreted per-element
-    evaluation, ~30× the raw hash cost.  This kernel exploits two algebraic
-    facts: (a) Spark folds ``xxhash64(s, lit(j))`` as ``xxh64_int(j,
-    seed=xxh64_bytes(utf8(s), 42))``, so the variable-length string hash is
-    computed ONCE per shingle and each of the n_hashes seed variants is a
-    few constant-folded vector ops; (b) word n-grams joined by ' ' are
-    contiguous SLICES of the doc's single-space-joined sentence, so no
-    shingle string is ever materialized — the byte kernel hashes slices of
-    one shared buffer.  ``array_distinct`` is dropped because min() over a
-    multiset equals min() over its set.  Word splitting stays in Spark
-    (``F.split``, Java regex semantics) so corner cases (leading empties,
-    \\x0B) cannot drift.  Measured: the signature+bands stage 18.4 s → well
-    under 2 s; full LSH 19.9 s → ~5 s at local[32]/600k docs.
+    Motivation (r6, guide §4.2): the 16 HOF expressions ran 18.4 s over
+    600k docs and the shingle-string construction another 8 s — interpreted
+    per-element evaluation, ~30× the raw hash cost.  This kernel exploits
+    two algebraic facts: (a) Spark folds ``xxhash64(s, lit(j))`` as
+    ``xxh64_int(j, seed=xxh64_bytes(utf8(s), 42))``, so the variable-length
+    string hash is computed ONCE per shingle and each of the n_hashes seed
+    variants is a few constant-folded vector ops; (b) every n-gram is a
+    contiguous slice of one shared buffer (``_shingle_slices``), so no
+    shingle string is ever materialized.  ``array_distinct`` is dropped
+    because min() over a multiset equals min() over its set.  Measured: the
+    word signature+bands stage 18.4 s → well under 2 s; full LSH 19.9 s →
+    ~5 s at local[32]/600k docs.
     """
     import numpy as np
     import pyarrow as pa
 
-    words = df.select(F.col(id_col), F.split(F.col(text_col), r"\s+").alias("_w"))
+    src = _shingle_input(df, text_col, id_col, unit)
     rows_per_band = n_hashes // n_bands
 
     def kernel(batches):
@@ -227,7 +216,7 @@ def _word_minhash_bands(
 
         for batch in batches:
             ids = batch.column(0)
-            m, n_sh, buf, sh_start, sh_len = _shingle_slices(batch.column(1), shingle)
+            n_sh, buf, sh_start, sh_len = _shingle_slices(batch.column(1), shingle)
             keep = n_sh > 0
             if not keep.any():
                 continue
@@ -266,7 +255,7 @@ def _word_minhash_bands(
             )
 
     id_type = dict(df.dtypes)[id_col]
-    per_doc = words.mapInArrow(
+    per_doc = src.mapInArrow(
         kernel, f"{id_col} {id_type}, sig array<long>, band_keys array<long>"
     )
     return per_doc.select(
@@ -286,9 +275,10 @@ def minhash_lsh_candidates(
 ) -> DataFrame:
     """Near-duplicate candidate pairs via banded MinHash LSH.
 
-    Plan shape (scale-first): signature computed in one projection (no
-    shuffle) → explode to n_bands rows/doc → ONE shuffle on (band, band_key)
-    → per-bucket pair emission → estimated Jaccard from full signatures.
+    Plan shape (scale-first): signature and band keys computed in one Arrow
+    kernel (no shuffle) → explode to n_bands rows/doc → ONE shuffle on
+    (band, band_key) → per-bucket pair emission → estimated Jaccard from
+    full signatures.
 
     Pair emission is CAPPED: buckets of ≤ ``bucket_cap`` docs emit all pairs;
     larger buckets emit a star from the bucket's min-id representative —
@@ -297,56 +287,13 @@ def minhash_lsh_candidates(
     docs (k in the millions) shares every band.  Connectivity for downstream
     union-find grouping is preserved (the star spans the bucket).
     """
-    from pyspark.sql.window import Window
-
     if n_hashes % n_bands != 0:
         raise ValueError(
             f"n_hashes ({n_hashes}) must be divisible by n_bands ({n_bands}): "
             "trailing signature slots would be computed but never banded, "
             "silently changing the (bands, rows) sensitivity curve"
         )
-    rows_per_band = n_hashes // n_bands
-    # materialize the shingle array behind a projection boundary BEFORE the
-    # signature: inlining char_shingles into minhash_signature makes Catalyst
-    # re-evaluate the whole shingle transform once PER HASH FUNCTION (no CSE
-    # across the n_hashes array_min branches) — measured 34.6s → 5.2s at
-    # sf0.1 with 16 hashes
-    # docs shorter than the shingle length have NO shingles → no bands.
-    # Without this filter, array_min(empty)=null makes every short doc share
-    # the all-null signature and ONE band bucket — unrelated two-char docs
-    # would "cluster" and all but one be dropped (the sequential oracle,
-    # oracle_recompute.minhash_pairs, skips them for the same reason).
-    if unit == "word":
-        # scale unit → vectorized Arrow kernel (bit-identical; see
-        # _word_minhash_bands for the measurements and the short-doc filter,
-        # which the kernel applies by emitting no rows for shingle-less docs)
-        bands = _word_minhash_bands(df, text_col, id_col, shingle, n_hashes, n_bands)
-    else:
-        sig = (
-            _shingled(df, text_col, id_col, shingle, unit)
-            .filter(F.size("_sh") > 0)
-            .select(
-                F.col(id_col),
-                minhash_signature(F.col("_sh"), n_hashes).alias("sig"),
-            )
-        )
-        bands = sig.select(
-            id_col,
-            "sig",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"),
-                            F.xxhash64(
-                                *[F.element_at("sig", b * rows_per_band + r + 1) for r in range(rows_per_band)]
-                            ).alias("band_key"),
-                        )
-                        for b in range(n_bands)
-                    ]
-                )
-            ).alias("bk"),
-        ).select(id_col, "sig", "bk.band", "bk.band_key")
+    bands = _minhash_bands(df, text_col, id_col, shingle, n_hashes, n_bands, unit)
     # Pair emission (r6 restructure, guide §2.4 — remove shuffles outright):
     # the former shape was window(_rn,_cnt) → localCheckpoint → two
     # self-joins (small buckets pairwise, big buckets star) → union →
@@ -375,7 +322,15 @@ def _bucket_pairs_kernel(
     run-length-segments (band, band_key), emits all C(k,2) ordered pairs for
     buckets ≤ ``bucket_cap`` and a min-id star for larger ones — identical
     output to the former join formulation (id-sorted ⇒ id_a < id_b), with
-    the bucket's internal work O(k) for stars and O(cap²) otherwise."""
+    the bucket's internal work O(k) for stars and O(cap²) otherwise.
+
+    The kernel streams its partition one Arrow batch at a time and carries
+    over only the trailing bucket, which may continue in the next batch: at
+    most ``bucket_cap`` rows, or — once the bucket has outgrown the cap and
+    is known to be a star — only its min-id representative, the star pairs
+    so far already emitted.  Memory per task is one batch plus the cap,
+    whatever the partition's size.
+    """
     import numpy as np
     import pyarrow as pa
 
@@ -394,48 +349,68 @@ def _bucket_pairs_kernel(
     )
 
     def pairs_fn(batches):
-        batch_list = list(batches)
-        if not batch_list:
-            return
-        tbl = pa.Table.from_batches(batch_list)
-        n = tbl.num_rows
-        if n == 0:
-            return
-        band = tbl.column("band").to_numpy()
-        key = tbl.column("band_key").to_numpy()
-        ids = tbl.column(id_col).combine_chunks()
-        sig_m = np.asarray(
-            tbl.column("sig").combine_chunks().flatten()
-        ).reshape(n, n_hashes)
-        change = np.flatnonzero((np.diff(band) != 0) | (np.diff(key) != 0)) + 1
-        starts = np.concatenate(([0], change, [n]))
-        sizes = np.diff(starts)
         tri_cache: dict = {}
-        a_parts, b_parts = [], []
-        for bi in np.flatnonzero(sizes >= 2):
-            s, k = int(starts[bi]), int(sizes[bi])
-            if k <= bucket_cap:
-                tri = tri_cache.get(k)
-                if tri is None:
-                    tri = tri_cache[k] = np.triu_indices(k, 1)
-                a_parts.append(s + tri[0])
-                b_parts.append(s + tri[1])
-            else:
-                a_parts.append(np.full(k - 1, s, dtype=np.int64))
-                b_parts.append(s + 1 + np.arange(k - 1, dtype=np.int64))
-        if not a_parts:
-            return
-        a_idx = np.concatenate(a_parts)
-        b_idx = np.concatenate(b_parts)
-        eq = (sig_m[a_idx] == sig_m[b_idx]).sum(axis=1).astype(np.int32)
-        yield pa.RecordBatch.from_arrays(
-            [
-                ids.take(pa.array(a_idx)),
-                ids.take(pa.array(b_idx)),
-                pa.array(eq),
-            ],
-            names=["id_a", "id_b", "equal_hashes"],
-        )
+
+        def emit(ids, sig, buckets):
+            # buckets: (start row, size, is_star); a star pairs its first
+            # (min-id) row with every other row
+            a_parts, b_parts = [], []
+            for s, k, is_star in buckets:
+                if is_star:
+                    a_parts.append(np.full(k - 1, s, dtype=np.int64))
+                    b_parts.append(s + 1 + np.arange(k - 1, dtype=np.int64))
+                else:
+                    tri = tri_cache.get(k)
+                    if tri is None:
+                        tri = tri_cache[k] = np.triu_indices(k, 1)
+                    a_parts.append(s + tri[0])
+                    b_parts.append(s + tri[1])
+            if not a_parts:
+                return
+            a_idx = np.concatenate(a_parts)
+            b_idx = np.concatenate(b_parts)
+            eq = (sig[a_idx] == sig[b_idx]).sum(axis=1).astype(np.int32)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    ids.take(pa.array(a_idx)),
+                    ids.take(pa.array(b_idx)),
+                    pa.array(eq),
+                ],
+                names=["id_a", "id_b", "equal_hashes"],
+            )
+
+        def ids_sig(b):
+            sig = np.asarray(b.column("sig").flatten()).reshape(b.num_rows, n_hashes)
+            return b.column(id_col), sig
+
+        carry = None  # rows of the trailing open bucket
+        star = False  # carry is a star's representative, pairs emitted
+        for batch in batches:
+            if carry is not None:
+                batch = pa.Table.from_batches([carry, batch]).combine_chunks().to_batches()[0]
+            n = batch.num_rows
+            if n == 0:
+                continue
+            band = batch.column("band").to_numpy()
+            key = batch.column("band_key").to_numpy()
+            change = np.flatnonzero((np.diff(band) != 0) | (np.diff(key) != 0)) + 1
+            starts = np.concatenate(([0], change))
+            sizes = np.diff(np.append(starts, n))
+            is_star = sizes > bucket_cap
+            is_star[0] |= star
+            closed = [
+                (int(starts[i]), int(sizes[i]), bool(is_star[i]))
+                for i in np.flatnonzero((sizes[:-1] >= 2) | is_star[:-1])
+            ]
+            # the last bucket stays open: a star emits its pairs so far and
+            # keeps its representative, a small bucket keeps all its rows
+            s, star = int(starts[-1]), bool(is_star[-1])
+            if star:
+                closed.append((s, n - s, True))
+            yield from emit(*ids_sig(batch), closed)
+            carry = batch.slice(s, 1 if star else n - s)
+        if carry is not None and not star and carry.num_rows >= 2:
+            yield from emit(*ids_sig(carry), [(0, carry.num_rows, False)])
 
     return shaped.mapInArrow(
         pairs_fn, f"id_a {id_type}, id_b {id_type}, equal_hashes int"

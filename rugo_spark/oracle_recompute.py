@@ -174,8 +174,9 @@ def fingerprint_row(text: str, P: int = 1099511628211) -> int:
 
 
 def shingles_row(text: str, n: int = 5, unit: str = "char") -> list[str]:
-    """Distinct n-grams, first-occurrence order (ops/dedup.char_shingles /
-    word_shingles).  ``unit='word'`` mirrors Spark's ``split(text, '\\s+')``
+    """Distinct n-grams, first-occurrence order (ops/dedup._shingled).
+    ``unit='char'`` slices code points, like Spark's ``substr``;
+    ``unit='word'`` mirrors Spark's ``split(text, '\\s+')``
     with default limit=-1: leading/trailing empty strings are KEPT (Java
     Pattern.split with a negative limit), so ' a b ' has words
     ['', 'a', 'b', '']."""

@@ -14,7 +14,7 @@ import pytest
 
 from rugo_spark import oracle_recompute as orc
 from rugo_spark.docgen import doc_batch, spark_doc_df
-from rugo_spark.ops.dedup import dedup_clusters, minhash_lsh_candidates, word_shingles
+from rugo_spark.ops.dedup import _shingled, dedup_clusters, minhash_lsh_candidates
 
 
 def test_word_shingles_match_oracle_on_edge_cases(spark):
@@ -30,14 +30,9 @@ def test_word_shingles_match_oracle_on_edge_cases(spark):
         "tab\tand\nnewline separated words here",
     ]
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "id long, text string")
-    got = (
-        df.select("id", F.split("text", r"\s+").alias("_w"))
-        .select("id", word_shingles("_w", 3).alias("sh"))
-        .orderBy("id")
-        .collect()
-    )
+    got = _shingled(df, "text", "id", 3, "word").orderBy("id").collect()
     for row, text in zip(got, texts):
-        assert row["sh"] == orc.shingles_row(text, 3, unit="word"), repr(text)
+        assert row["_sh"] == orc.shingles_row(text, 3, unit="word"), repr(text)
 
 
 def test_lsh_words_matches_sequential_oracle(spark):

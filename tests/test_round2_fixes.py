@@ -69,12 +69,12 @@ def test_bloom_timestamp_filter_end_to_end(spark, tmp_out):
 # ------------------------------------------------------------ shingles
 
 def test_char_shingles_count_and_short_text(spark):
-    from rugo_spark.ops.dedup import char_shingles
+    from rugo_spark.ops.dedup import _shingled
 
     df = spark.createDataFrame(
-        pd.DataFrame({"text": ["abcdef", "abc", "", "abcde"]})
-    ).select(char_shingles("text", 5).alias("sh"))
-    got = [r["sh"] for r in df.collect()]
+        pd.DataFrame({"id": [0, 1, 2, 3], "text": ["abcdef", "abc", "", "abcde"]})
+    )
+    got = [r["_sh"] for r in _shingled(df, "text", "id", 5, "char").orderBy("id").collect()]
     assert got[0] == ["abcde", "bcdef"]  # L-n+1 = 2 shingles, final one kept
     assert got[1] == []  # shorter than n → empty, not whole-text
     assert got[2] == []

@@ -8,11 +8,13 @@ Three layers, each against an independent formulation:
 2. The numpy string kernel vs Spark's own ``F.xxhash64`` (the bit-identity
    the LSH signature relies on: ``xxhash64(s, lit(j)) == xxh64_int(j,
    seed=xxh64_bytes(utf8(s), 42))``).
-3. ``_word_minhash_bands`` (the Arrow kernel) vs the SQL formulation it
-   replaced (``_shingled`` + ``minhash_signature`` + band explode) on texts
-   with empty tokens, repeated shingles, unicode, and too-short docs —
-   including the single-task union-find vs the iterative label-propagation
-   loop in ``connected_components``.
+3. ``_minhash_bands`` (the Arrow kernel, char and word unit) vs the SQL
+   higher-order-function formulation it replaced, kept here as the
+   reference (shingle expressions + per-seed ``F.xxhash64`` signature +
+   band explode), on texts with empty tokens, repeated shingles, multibyte
+   UTF-8 (accents, CJK, emoji), null and too-short docs — and the
+   single-task union-find vs the iterative label-propagation loop in
+   ``connected_components``.
 """
 
 from __future__ import annotations
@@ -78,7 +80,7 @@ def test_xxh64_vec_matches_spark_builtin(spark):
 
 _TRICKY_TEXTS = [
     (1, "plain three word shingles here ok"),
-    (2, "two words"),                           # below shingle length -> dropped
+    (2, "two words"),                           # below word shingle length
     (3, ""),                                    # empty -> dropped
     (4, None),                                  # null text -> dropped
     (5, "  leading and   multiple   spaces"),   # split() empty-token semantics
@@ -87,21 +89,42 @@ _TRICKY_TEXTS = [
     (8, "one two three"),                       # exactly one shingle
     (9, "tab\tand\nnewline separated words here"),
     (10, "a b c d e f g h i j k l m n o p q r s t u v w x y z"),
+    (11, "日本語のテキストを分割する 東京 大阪 京都"),  # CJK, 3-byte code points
+    (12, "emoji 😀😃😄😁 mixed 😀😃😄😁 text"),  # 4-byte code points
+    (13, "é😀日"),                              # below char shingle length
+    (14, "aé😀日b"),                            # exactly one char shingle
 ]
 
 
-@pytest.mark.parametrize("n_hashes,n_bands", [(16, 4), (8, 2)])
-def test_word_kernel_matches_sql_formulation(spark, n_hashes, n_bands):
-    from rugo_spark.ops import dedup as dd
+def _sql_shingles(unit: str, n: int):
+    """The former SQL shingle builders: distinct char n-grams by code-point
+    ``substr``, or distinct space-joined word n-grams of ``split(text)``."""
+    if unit == "char":
+        body = (f"if(length(text) < {n}, array(), transform(sequence(1,"
+                f" length(text) - {n - 1}), i -> substr(text, i, {n})))")
+    else:
+        body = (f"if(size(_w) < {n}, array(), transform(sequence(1,"
+                f" size(_w) - {n - 1}), i -> array_join(slice(_w, i, {n}), ' ')))")
+    return F.array_distinct(F.expr(body))
 
-    df = spark.createDataFrame(_TRICKY_TEXTS, "doc_id long, text string")
+
+def _sql_minhash_bands(df, unit, shingle, n_hashes, n_bands):
+    """(doc_id, sig, band, band_key) the way the SQL path built them: one
+    ``array_min(transform(_sh, s -> xxhash64(s, j)))`` per hash (the seed
+    lambda comes from a one-parameter factory — a two-parameter lambda is
+    the (element, index) form), then ``xxhash64`` over each band's slots."""
+    words = df.withColumn("_w", F.split("text", r"\s+"))
+    sh = (words.select("doc_id", _sql_shingles(unit, shingle).alias("_sh"))
+          .filter(F.size("_sh") > 0))
+
+    def seeded(j):
+        return lambda s: F.xxhash64(s, F.lit(j))
+
+    sig = sh.select("doc_id", F.array(*[
+        F.array_min(F.transform("_sh", seeded(j))) for j in range(n_hashes)
+    ]).alias("sig"))
     rpb = n_hashes // n_bands
-    sig = (
-        dd._shingled(df, "text", "doc_id", 3, "word")
-        .filter(F.size("_sh") > 0)
-        .select(F.col("doc_id"), dd.minhash_signature(F.col("_sh"), n_hashes).alias("sig"))
-    )
-    old = sig.select(
+    return sig.select(
         "doc_id", "sig",
         F.explode(F.array(*[
             F.struct(
@@ -110,12 +133,31 @@ def test_word_kernel_matches_sql_formulation(spark, n_hashes, n_bands):
             ) for b in range(n_bands)
         ])).alias("bk"),
     ).select("doc_id", "sig", "bk.band", "bk.band_key")
-    new = dd._word_minhash_bands(df, "text", "doc_id", 3, n_hashes, n_bands)
+
+
+@pytest.mark.parametrize("n_hashes,n_bands", [(16, 4), (8, 2)])
+@pytest.mark.parametrize("unit,shingle", [("word", 3), ("char", 5)])
+def test_minhash_kernel_matches_sql_formulation(spark, unit, shingle, n_hashes, n_bands):
+    from rugo_spark.ops import dedup as dd
+
+    df = spark.createDataFrame(_TRICKY_TEXTS, "doc_id long, text string")
+    old = _sql_minhash_bands(df, unit, shingle, n_hashes, n_bands)
+    new = dd._minhash_bands(df, "text", "doc_id", shingle, n_hashes, n_bands, unit)
     key = lambda r: (r["doc_id"], r["band"])
     old_rows = sorted([r.asDict() for r in old.collect()], key=key)
     new_rows = sorted([r.asDict() for r in new.collect()], key=key)
     assert old_rows == new_rows
-    assert {r["doc_id"] for r in new_rows} == {1, 5, 6, 7, 8, 9, 10}
+    with_shingles = {
+        "word": {1, 5, 6, 7, 8, 9, 10, 11, 12},
+        "char": {1, 2, 5, 6, 7, 8, 9, 10, 11, 12, 14},
+    }
+    assert {r["doc_id"] for r in new_rows} == with_shingles[unit]
+    shingles = {r["doc_id"]: r["_sh"] for r in
+                dd._shingled(df, "text", "doc_id", shingle, unit).collect()}
+    sql = {r["doc_id"]: r["_sh"] or [] for r in
+           df.withColumn("_w", F.split("text", r"\s+"))
+           .select("doc_id", _sql_shingles(unit, shingle).alias("_sh")).collect()}
+    assert shingles == sql
 
 
 def test_components_local_matches_iterative_loop(spark):
